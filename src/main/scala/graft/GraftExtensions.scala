@@ -13,7 +13,10 @@ import graft.functions.{Hilbert2D, HilbertN, PqAssign, ShingleNGrams,
   * `vec_dot(a, b)`, the [[graft.functions.ShingleNGrams]] kernel as
   * `shingles(tokens, n, distinct)`, and installs the
   * [[graft.functions.VectorizeDotProduct]] optimizer rule that
-  * auto-rewrites HOF dot products into VecDot.
+  * auto-rewrites HOF dot products into VecDot, and the
+  * [[graft.plans.FoldCollectOverExplode]] rule that folds a global
+  * `collect_list` over `explode` of one local row into an array
+  * expression (the job-free Metlink snapshot path).
   *
   * Also registers the whole-operator TABLE functions `cdc_merge`,
   * `attribution_credits`, `sq8_search`, `bfs_hops`,
@@ -668,6 +671,12 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
           intConst(children(2), "subDim"), intConst(children(3), "k"))
       }))
     ext.injectOptimizerRule(_ => VectorizeDotProduct)
+    // A global collect_list over explode of a one-row local relation
+    // becomes one array expression, so the Metlink snapshot path
+    // (featureCollection over pipeline of one fetched document)
+    // folds into a driver-side LocalRelation and runs no job; the
+    // result is the same without it, with one exchange.
+    ext.injectOptimizerRule(_ => graft.plans.FoldCollectOverExplode)
     // Materialized-view answering (q207): rewrites a matching
     // Aggregate-over-base-scan to a rollup over the registered
     // summary — inert until graft.plans.MvRegistry.register is

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.functions
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -12,9 +13,12 @@ import org.apache.spark.sql.types._
   *
   * The reference processes one JSON snapshot in a single fused loop
   * (task.ts:194-321); here each step is a declarative Column and
-  * Catalyst's WholeStageCodegen re-fuses them — same single pass,
-  * but columnar, parallel, and scale-free (the only shuffle is the
-  * last-wins dedup window, partitioned by cotId).
+  * Catalyst re-fuses them. The per-entity rules live once, in the
+  * [[keep]] predicate and the [[feature]] struct; two forms apply
+  * them. [[pipeline]] takes snapshot documents and dedups inside each
+  * one, with no shuffle, as the reference's per-invocation Map does;
+  * [[transform]] takes entity rows and dedups across the whole frame
+  * with a window partitioned by cotId, its only shuffle.
   */
 object Metlink {
 
@@ -156,82 +160,91 @@ object Metlink {
       when(speed.isNotNull,
         concat(lit("Speed: "), jsToFixed1(speed), lit(" m/s"))))
 
-  /** The full per-entity transform (task.ts:194-321) over an
-    * already-exploded entity frame. `seq` is the arrival-order
-    * column driving A1 last-wins dedup (task.ts:191,312: a Map.set
-    * overwrite — later entity wins). Emits one GeoJSON-feature row
-    * per surviving cotId.
-    */
-  def transform(entities: DataFrame, seq: Column,
-      cfg: Config = Config()): DataFrame = {
-    val trip = col("vehicle.trip")
-    val pos = col("vehicle.position")
-    val cls = col("__cls")
+  /** F1-F4 (task.ts:195-249): whether an entity with this `vehicle`
+    * struct and class struct `cls` ([[classifyVehicle]]) survives the
+    * reference's filters. Shared by [[transform]] and [[pipeline]]. */
+  def keep(vehicle: Column, cls: Column, cfg: Config): Column = {
+    val pos = vehicle.getField("position")
+    val tripId = vehicle.getField("trip").getField("trip_id")
     val shownTypes = Seq("Bus" -> cfg.showBuses,
       "Train" -> cfg.showTrains, "Ship" -> cfg.showShips)
       .collect { case (t, true) => t }
-    val shown =
-      if (shownTypes.isEmpty) lit(false)
-      else cls.getField("vehicleType").isin(shownTypes: _*)
+    // F1 (task.ts:195)
+    vehicle.isNotNull && pos.isNotNull &&
+      // F2 (task.ts:204-206)
+      !(pos.getField("latitude") === 0d &&
+        pos.getField("longitude") === 0d) &&
+      // F3 (task.ts:209-212): JS falsy — null or empty string
+      tripId.isNotNull && tripId =!= "" &&
+      // F4 (task.ts:245-249)
+      (if (shownTypes.isEmpty) lit(false)
+       else cls.getField("vehicleType").isin(shownTypes: _*))
+  }
+
+  /** The GeoJSON Feature a kept entity becomes (task.ts:251-320):
+    * struct {id (the P3 cotId), type, properties, geometry}. Shared by
+    * [[transform]] and [[pipeline]], so both emit the same JSON. */
+  def feature(entityId: Column, vehicle: Column, cls: Column): Column = {
+    val trip = vehicle.getField("trip")
+    val pos = vehicle.getField("position")
+    val vehicleType = cls.getField("vehicleType")
+    val vehicleId = vehicle.getField("vehicle").getField("id")
+    val route = correctRouteId(trip.getField("trip_id"))
+    val time = timestamp_seconds(vehicle.getField("timestamp"))
+    struct(
+      cotId(vehicleType, vehicleId).as("id"),
+      lit("Feature").as("type"),
+      struct(
+        cls.getField("cotType").as("type"),
+        concat(lit("Route "), route, lit(" - "), vehicleType, lit(" "),
+          vehicleId).as("callsign"),
+        time.as("time"),
+        time.as("start"),
+        falsyToNaN(pos.getField("speed")).as("speed"),
+        falsyToNaN(pos.getField("bearing")).as("course"),
+        cls.getField("markerColor").as("marker-color"),
+        lit(StaleMs).as("stale"),
+        struct(
+          entityId.as("id"),
+          vehicle.as("vehicle"),
+          vehicleType.as("vehicleType"),
+          route.as("routeId"),
+          trip.getField("direction_id").as("directionId"),
+          vehicleId.as("vehicleId"),
+          decodeOccupancy(vehicle.getField("occupancy_status"))
+            .as("occupancy")).as("metadata"),
+        buildRemarks(vehicleType, vehicleId, route,
+          trip.getField("trip_id"), trip.getField("direction_id"),
+          trip.getField("start_time"),
+          vehicle.getField("occupancy_status"),
+          pos.getField("speed")).as("remarks"),
+        cls.getField("icon").as("icon")).as("properties"),
+      struct(
+        lit("Point").as("type"),
+        array(pos.getField("longitude"), pos.getField("latitude"))
+          .as("coordinates")).as("geometry"))
+  }
+
+  /** The row form of the per-entity transform (task.ts:194-321), over
+    * an already-exploded entity frame: one GeoJSON-feature row per
+    * surviving cotId. `seq` is the arrival-order column driving A1
+    * last-wins dedup (task.ts:191,312: a Map.set overwrite — later
+    * entity wins), applied across the WHOLE frame by a window
+    * partitioned by cotId — the form for entity rows that arrive from
+    * many sources at scale (q39/q40). For snapshot documents use
+    * [[pipeline]], which dedups per document without a shuffle.
+    */
+  def transform(entities: DataFrame, seq: Column,
+      cfg: Config = Config()): DataFrame = {
     val lastWins = Window.partitionBy(col("id"))
       .orderBy(col("__seq").desc)
     entities
-      .withColumn("__seq", seq)
-      // F1 (task.ts:195)
-      .filter(col("vehicle").isNotNull && pos.isNotNull)
-      // F2 (task.ts:204-206)
-      .filter(!(pos.getField("latitude") === 0d &&
-        pos.getField("longitude") === 0d))
-      // F3 (task.ts:209-212): JS falsy — null or empty string
-      .filter(trip.getField("trip_id").isNotNull &&
-        trip.getField("trip_id") =!= "")
-      .withColumn("__cls", classifyVehicle(trip.getField("trip_id")))
-      // F4 (task.ts:245-249)
-      .filter(shown)
-      .select(
-        col("__seq"),
-        col("id").as("__entity_id"),
-        col("vehicle"),
-        cls,
-        cotId(cls.getField("vehicleType"),
-          col("vehicle.vehicle.id")).as("id"),
-        correctRouteId(trip.getField("trip_id")).as("__route"))
-      .select(
-        col("__seq"), col("id"),
-        lit("Feature").as("type"),
-        struct(
-          cls.getField("cotType").as("type"),
-          concat(lit("Route "), col("__route"), lit(" - "),
-            cls.getField("vehicleType"), lit(" "),
-            col("vehicle.vehicle.id")).as("callsign"),
-          timestamp_seconds(col("vehicle.timestamp")).as("time"),
-          timestamp_seconds(col("vehicle.timestamp")).as("start"),
-          falsyToNaN(col("vehicle.position.speed")).as("speed"),
-          falsyToNaN(col("vehicle.position.bearing")).as("course"),
-          cls.getField("markerColor").as("marker-color"),
-          lit(StaleMs).as("stale"),
-          struct(
-            col("__entity_id").as("id"),
-            col("vehicle"),
-            cls.getField("vehicleType").as("vehicleType"),
-            col("__route").as("routeId"),
-            col("vehicle.trip.direction_id").as("directionId"),
-            col("vehicle.vehicle.id").as("vehicleId"),
-            decodeOccupancy(col("vehicle.occupancy_status"))
-              .as("occupancy")).as("metadata"),
-          buildRemarks(
-            cls.getField("vehicleType"), col("vehicle.vehicle.id"),
-            col("__route"), col("vehicle.trip.trip_id"),
-            col("vehicle.trip.direction_id"),
-            col("vehicle.trip.start_time"),
-            col("vehicle.occupancy_status"),
-            col("vehicle.position.speed")).as("remarks"),
-          cls.getField("icon").as("icon")).as("properties"),
-        struct(
-          lit("Point").as("type"),
-          array(col("vehicle.position.longitude"),
-            col("vehicle.position.latitude")).as("coordinates"))
-          .as("geometry"))
+      .select(seq.as("__seq"), col("id"), col("vehicle"),
+        classifyVehicle(col("vehicle.trip.trip_id")).as("__cls"))
+      .filter(keep(col("vehicle"), col("__cls"), cfg))
+      .select(col("__seq"),
+        feature(col("id"), col("vehicle"), col("__cls")).as("__f"))
+      .select(col("__seq"), col("__f.*"))
       // A1 (task.ts:191,312): last write wins per cotId
       .withColumn("__rn", row_number().over(lastWins))
       .filter(col("__rn") === 1)
@@ -252,22 +265,62 @@ object Metlink {
       .limit(1).collect().headOption
       .map(_.getString(0).take(maxChars) + "...")
 
-  /** Feed-envelope entry: posexplode preserves the entity array
-    * index as the arrival order the reference's loop implies
-    * (SURVEY.md §7.4 — monotonically_increasing_id is only
-    * partition-ordered; the array index is exact). */
+  /** The document form: one row per GTFS-RT snapshot (the feed
+    * envelope), one GeoJSON-feature row per surviving cotId out. A1
+    * last-wins dedup (task.ts:191,312) runs inside each document's
+    * `entity` array, as the reference's per-invocation `features` Map
+    * does: each cotId keeps its first-seen position and its last-seen
+    * value (JS `Map.set` semantics), and two documents in one frame
+    * (two files of a stream micro-batch) never dedup against each
+    * other. Rows come out in document order, then first-seen order.
+    *
+    * No window and no shuffle: every step is a per-row array
+    * expression, so on a one-document local frame (the HTTP edge's
+    * [[graft.sources.Sources.jsonDocument]]) the whole plan up to the
+    * explode folds on the driver. The dedup costs one key scan per
+    * distinct cotId, O(n·d) in a document of n entities with d
+    * distinct cotIds — documents are snapshot-sized (O(1000)). */
   def pipeline(feed: DataFrame, cfg: Config = Config()): DataFrame = {
-    val exploded = feed
-      .select(posexplode(col("entity")).as(Seq("__pos", "e")))
-      .select(col("__pos"), col("e.*"))
-    transform(exploded, col("__pos"), cfg)
+    val classified = functions.transform(col("entity"), e => struct(
+      e.getField("id").as("id"), e.getField("vehicle").as("vehicle"),
+      classifyVehicle(e.getField("vehicle").getField("trip")
+        .getField("trip_id")).as("cls")))
+    val feats = functions.transform(
+      filter(classified, e => keep(e("vehicle"), e("cls"), cfg)),
+      e => feature(e("id"), e("vehicle"), e("cls")))
+    // Dedup keys, reversed so that array_position finds a key's LAST
+    // occurrence. A null cotId gets key "-" (every other key starts
+    // with "+"), so null ids share one key, as in transform's window.
+    val rkeys = reverse(functions.transform(col("__feats"),
+      f => coalesce(concat(lit("+"), f("id")), lit("-"))))
+    // A1 (task.ts:191,312): distinct keys in first-seen order, each
+    // mapped to the feature at its last occurrence
+    val lastWins = functions.transform(
+      array_distinct(reverse(col("__rkeys"))),
+      k => element_at(col("__feats"),
+        -array_position(col("__rkeys"), k).cast("int")))
+    // One select per array, each referenced twice below, so that
+    // CollapseProject keeps them apart and each is built once rather
+    // than re-derived inside the next lambda.
+    feed
+      .select(feats.as("__feats"))
+      .select(col("__feats"), rkeys.as("__rkeys"))
+      .select(explode(lastWins).as("__f"))
+      .select(col("__f.*"))
   }
 
   /** K1 (task.ts:324-341): wrap all features into one
     * FeatureCollection JSON document — the reference's exact wire
     * format. `collect_list` funnels every feature through one row,
     * so this sink is for the reference's snapshot sizes (O(1000)
-    * vehicles); at scale use [[featureCollectionPartitioned]]. */
+    * vehicles); at scale use [[featureCollectionPartitioned]].
+    *
+    * Over [[pipeline]] on a one-document local frame, graft's
+    * [[graft.plans.FoldCollectOverExplode]] rule turns the
+    * collect-over-explode into one array expression, so the whole
+    * plan folds into a driver-side LocalRelation and `collect()`
+    * launches no Spark job. Without the rule the same plan runs with
+    * one exchange. */
   def featureCollection(features: DataFrame): DataFrame =
     features
       .agg(collect_list(struct(col("id"), col("type"),

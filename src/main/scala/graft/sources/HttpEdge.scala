@@ -12,10 +12,12 @@ import graft.operators.Metlink
   * boundaries made real: GET the GTFS-RT snapshot with an `x-api-key`
   * header (task.ts:150-167) and POST the resulting FeatureCollection
   * to the sink endpoint (task.ts:341). Both calls stay DRIVER-side,
-  * exactly like the reference's Lambda; the distributed work happens
+  * exactly like the reference's Lambda; the Spark work happens
   * between them, behind the [[Sources.jsonDocument]] /
-  * [[Metlink.featureCollection]] boundary. JDK `java.net.http` only —
-  * no added dependencies.
+  * [[Metlink.featureCollection]] boundary. For one fetched snapshot
+  * that work plans to a driver-side LocalRelation and launches no
+  * job (see [[Metlink.pipeline]]). JDK `java.net.http` only — no
+  * added dependencies.
   */
 object HttpEdge {
 

@@ -3,16 +3,20 @@ package graft
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets.UTF_8
 
+import scala.jdk.CollectionConverters._
+
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
-import org.apache.spark.sql.functions._
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.execution.LocalTableScanExec
 
 import graft.operators.Metlink
-import graft.sources.HttpEdge
+import graft.sources.{HttpEdge, Sources}
 
 /** End-to-end HTTP edge tests against a local stub server: the full
-  * fetch → pipeline → submit loop, the error → empty-FeatureCollection
-  * fallback (task.ts:180-188), and the partitioned Feature sink's
-  * equivalence to the single-document wrap.
+  * fetch → pipeline → submit loop (which launches no Spark job: one
+  * snapshot plans to a LocalTableScan), the error →
+  * empty-FeatureCollection fallback (task.ts:180-188), and the
+  * partitioned Feature sink's equivalence to the single-document wrap.
   */
 class HttpEdgeSpec extends SparkSpec {
   import spark.implicits._
@@ -62,9 +66,44 @@ class HttpEdgeSpec extends SparkSpec {
     finally server.stop(0)
   }
 
+  /** Runs `f` under job group `group` and returns its result with the
+    * ids of the jobs it started: a marker job run after `f` flushes
+    * the listener queue, which delivers job starts in order. */
+  private def withJobs[T](group: String)(f: => T): (T, Seq[Int]) = {
+    val sc = spark.sparkContext
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, Int)]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        seen.add((Option(e.properties)
+          .map(_.getProperty("spark.jobGroup.id")).orNull, e.jobId))
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, group)
+      val out = try f finally sc.clearJobGroup()
+      val marker = s"$group-marker"
+      sc.setJobGroup(marker, marker)
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 10000000000L
+      while (!seen.asScala.exists(_._1 == marker) &&
+          System.nanoTime() < deadline) Thread.sleep(10)
+      assert(seen.asScala.exists(_._1 == marker), "marker job not seen")
+      (out, seen.asScala.collect { case (`group`, id) => id }.toSeq)
+    } finally sc.removeSparkListener(listener)
+  }
+
   test("fetch → pipeline → submit round-trip with api key header") {
     withServer(200, fixtureJson) { (feedUrl, submitUrl, state) =>
-      val fc = HttpEdge.runMetlink(spark, feedUrl, "secret-key", submitUrl)
+      val (fc, jobs) = withJobs("metlink-edge") {
+        HttpEdge.runMetlink(spark, feedUrl, "secret-key", submitUrl)
+      }
+      // one snapshot plans to a driver-side LocalRelation: no job
+      assert(jobs.isEmpty, s"runMetlink launched jobs $jobs")
+      val snapshot = Metlink.featureCollection(Metlink.pipeline(
+        Sources.requireShape(Sources.jsonDocument(spark, fixtureJson,
+          Metlink.vehicleSchema), "entity")))
+      val plan = snapshot.queryExecution.executedPlan
+      assert(plan.isInstanceOf[LocalTableScanExec], plan.treeString)
       val (posted, apiKey) = state()
       assert(apiKey == "secret-key")
       assert(posted == fc)

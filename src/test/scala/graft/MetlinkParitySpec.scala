@@ -131,6 +131,33 @@ class MetlinkParitySpec extends SparkSpec {
     assert(remarks.contains("Occupancy: Not accepting passengers"))
   }
 
+  test("feature order: first-seen position, last-seen value (task.ts:312)") {
+    // JS Map.set on an existing key keeps its insertion position: b1
+    // stays first although its value comes from e9
+    val fc = Metlink.featureCollection(features).as[String].head()
+    val ids = "\"id\":\"(WLG-[^\"]+)\"".r.findAllMatchIn(fc)
+      .map(_.group(1)).toSeq
+    assert(ids == Seq("WLG-MetlinkBus-b1", "WLG-MetlinkTrain-t1",
+      "WLG-MetlinkTrain-t2", "WLG-MetlinkShip-s1", "WLG-MetlinkShip-s2"))
+    assert(fc.contains("Route 29 - Bus b1"))
+  }
+
+  test("two documents in one frame dedup per snapshot (task.ts:191)") {
+    def doc(tripId: String, ts: Long): String =
+      s"""{"header": {}, "entity": [{"id": "e1", "vehicle": {
+        "trip": {"trip_id": "$tripId"},
+        "position": {"latitude": -41.1, "longitude": 174.8},
+        "timestamp": $ts, "vehicle": {"id": "b1"}}}]}"""
+    val feed = spark.read.schema(Metlink.vehicleSchema)
+      .json(Seq(doc("23__a", 1700000000L), doc("29__b", 1700000060L)).toDS)
+    val got = Metlink.pipeline(feed)
+      .select($"id", $"properties.callsign").as[(String, String)]
+      .collect().toSeq
+    assert(got.sorted == Seq(
+      "WLG-MetlinkBus-b1" -> "Route 23 - Bus b1",
+      "WLG-MetlinkBus-b1" -> "Route 29 - Bus b1"))
+  }
+
   test("jsToFixed1 matches ECMA toFixed on binary-tie values") {
     val cases = Seq(
       6.55 -> "6.5",   // binary 6.5499… → JS "6.5" (Java %.1f: "6.6")
