@@ -1,675 +1,48 @@
 package graft
 
-import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.{DataFrame, SparkSession,
+  SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression,
-  ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain,
+  Cast, Expression, ExpressionInfo, Literal}
+import org.apache.spark.sql.catalyst.expressions.aggregate
+  .BloomFilterAggregate
+import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.{ArrayType, Decimal, FloatType,
+  NumericType}
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.functions.{Hilbert2D, HilbertN, PqAssign, ShingleNGrams,
   UnicodeNormalize, VecDot, VectorizeDotProduct}
+import graft.operators.{Attribution, Cdc, Cooccur, Corpus, Drift, Evals,
+  Graph, Journeys, PageRank, Ranks, Splits, Sq8}
 
-/** Engine extension point (SparkSessionExtensions): registers the
-  * native [[graft.functions.VecDot]] kernel as SQL function
-  * `vec_dot(a, b)`, the [[graft.functions.ShingleNGrams]] kernel as
-  * `shingles(tokens, n, distinct)`, and installs the
-  * [[graft.functions.VectorizeDotProduct]] optimizer rule that
-  * auto-rewrites HOF dot products into VecDot, and the
-  * [[graft.plans.FoldCollectOverExplode]] rule that folds a global
-  * `collect_list` over `explode` of one local row into an array
-  * expression (the job-free Metlink snapshot path).
+/** Engine extension point (SparkSessionExtensions): registers the SQL
+  * functions of the descriptor tables in the companion object and
+  * installs graft's optimizer rules.
   *
-  * Also registers the whole-operator TABLE functions `cdc_merge`,
-  * `attribution_credits`, `sq8_search`, `bfs_hops`,
-  * `shortest_paths`, `k_core`, `label_propagation`, `item_cooccur`,
-  * `hist_drift`, `chunk_tokens`, `personalized_pagerank`, the
-  * r10 graph completions `random_walks`, `modularity`,
-  * `core_numbers`, `closeness`, the r11 row-pattern matcher
-  * `match_recognize` ([[graft.operators.Journeys.matchRecognize]] —
-  * the SQL:2016 MATCH_RECOGNIZE shape: contiguous pattern +
-  * quantifiers + gap policy, skip past last row), the r15 two-phase
-  * rank `parallel_rank(view, group_cols_csv, order_cols_csv[,
-  * out_col])` ([[graft.operators.Ranks.parallelRank]] — the
-  * low-cardinality-group escape hatch from the single-task-per-group
-  * window-rank trap; its guarded offset collect runs at analysis
-  * time like the iterative graph functions), and the r11
-  * preference ranker `bradley_terry`
-  * ([[graft.operators.Evals.bradleyTerry]] over
-  * [[graft.operators.Evals.orientedPairs]])
-  * ([[graft.operators.Graph.randomWalks]],
-  * [[graft.operators.Graph.modularity]],
-  * [[graft.operators.Graph.coreNumbers]],
-  * [[graft.operators.Graph.sampledCloseness]];
-  * r9 wave: [[graft.operators.Cooccur.itemSimilarity]],
-  * [[graft.operators.Drift.histDrift]],
-  * [[graft.operators.Corpus.chunkTokens]],
-  * [[graft.operators.PageRank.personalizedRanks]]), which expose
-  * [[graft.operators.Cdc.mergeLatest]],
-  * [[graft.operators.Attribution.credits]],
-  * [[graft.operators.Sq8.searchTopK]], [[graft.operators.Graph
-  * .bfsHops]], [[graft.operators.Graph.boundedShortestPaths]],
-  * [[graft.operators.Graph.kCore]], and [[graft.operators.Graph
-  * .labelPropagation]] to the SQL front-end: the builder receives literal arguments (view
-  * names + column names) and returns the SAME logical plan the Scala
-  * API composes, so `SELECT * FROM cdc_merge('chg', 'k', 'seq',
-  * 'op', false)` plans identically to the API call. The first three
-  * are fully declarative (canonicalized-plan equality holds); the
-  * graph functions are iterative loops, so their per-round jobs run
-  * while the statement is ANALYZED (the same work a recursive CTE
-  * would execute) and the returned plan scans the checkpointed
-  * result — re-planning the same statement re-runs the traversal.
+  * A table function returns the logical plan its Scala API composes,
+  * so a declarative one (`cdc_merge`, `item_cooccur`, ...) plans
+  * identically to the API call. The iterative graph functions run
+  * their per-round jobs while the statement is ANALYZED (the work a
+  * recursive CTE would do) and return a plan over the checkpointed
+  * result, so re-planning the statement re-runs the traversal.
   *
   * Activate with
   * `.config("spark.sql.extensions", "graft.GraftExtensions")` (done
   * by [[Tables.configure]]) or `.withExtensions(new GraftExtensions)`.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-
-  /** Constant-fold a string argument of a table function (view and
-    * column names parameterize the PLAN, so they must be literals). */
-  private def strConst(e: Expression, what: String): String = {
-    require(e.foldable, s"$what must be a string literal, got ${e.sql}")
-    val v = e.eval()
-    require(v != null, s"$what must be a non-null string literal")
-    v.toString
-  }
-
-  private def intConstArg(e: Expression, what: String): Int = {
-    require(e.foldable, s"$what must be an int literal, got ${e.sql}")
-    e.eval() match {
-      case i: Int => i
-      case l: Long if l.isValidInt => l.toInt
-      case v => throw new IllegalArgumentException(
-        s"$what must be an int literal, got $v")
-    }
-  }
+  import GraftExtensions._
 
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectTableFunction((
-      new FunctionIdentifier("cdc_merge"),
-      new ExpressionInfo("graft.operators.Cdc", "cdc_merge"),
-      (children: Seq[Expression]) => {
-        require(children.size == 5,
-          "cdc_merge expects (log_view, key_cols_csv, seq_col, " +
-            s"op_col, keep_tombstones), got ${children.size}")
-        val spark = org.apache.spark.sql.SparkSession.active
-        val keep = {
-          val e = children(4)
-          require(e.foldable, "cdc_merge: keep_tombstones must be " +
-            s"a boolean literal, got ${e.sql}")
-          e.eval() match {
-            case b: Boolean => b
-            case v => throw new IllegalArgumentException(
-              s"cdc_merge: keep_tombstones must be boolean, got $v")
-          }
-        }
-        graft.operators.Cdc.mergeLatest(
-            spark.table(strConst(children(0), "cdc_merge: log_view")),
-            strConst(children(1), "cdc_merge: key_cols_csv")
-              .split(",").map(_.trim).toSeq,
-            strConst(children(2), "cdc_merge: seq_col"),
-            strConst(children(3), "cdc_merge: op_col"), keep)
-          .queryExecution.analyzed
-      }))
-    ext.injectTableFunction((
-      new FunctionIdentifier("attribution_credits"),
-      new ExpressionInfo("graft.operators.Attribution",
-        "attribution_credits"),
-      (children: Seq[Expression]) => {
-        require(children.size == 9,
-          "attribution_credits expects (events_view, user_col, " +
-            "id_col, ts_col, type_col, value_col, conv_type, " +
-            s"touch_types_csv, lookback_micros), got ${children.size}")
-        val spark = org.apache.spark.sql.SparkSession.active
-        val lookback = {
-          val e = children(8)
-          require(e.foldable, "attribution_credits: lookback_micros " +
-            s"must be a literal, got ${e.sql}")
-          e.eval() match {
-            case l: Long => l
-            case i: Int => i.toLong
-            case v => throw new IllegalArgumentException(
-              "attribution_credits: lookback_micros must be an " +
-                s"integer literal, got $v")
-          }
-        }
-        graft.operators.Attribution.credits(
-            spark.table(strConst(children(0),
-              "attribution_credits: events_view")),
-            strConst(children(1), "attribution_credits: user_col"),
-            strConst(children(2), "attribution_credits: id_col"),
-            strConst(children(3), "attribution_credits: ts_col"),
-            strConst(children(4), "attribution_credits: type_col"),
-            strConst(children(5), "attribution_credits: value_col"),
-            strConst(children(6), "attribution_credits: conv_type"),
-            strConst(children(7),
-              "attribution_credits: touch_types_csv")
-              .split(",").map(_.trim).toSeq,
-            lookback)
-          .queryExecution.analyzed
-      }))
-    ext.injectTableFunction((
-      new FunctionIdentifier("sq8_search"),
-      new ExpressionInfo("graft.operators.Sq8", "sq8_search"),
-      (children: Seq[Expression]) => {
-        require(children.size == 6,
-          "sq8_search expects (queries_view, corpus_view, id_col, " +
-            s"emb_col, m, k), got ${children.size}")
-        val spark = org.apache.spark.sql.SparkSession.active
-        graft.operators.Sq8.searchTopK(
-            spark.table(strConst(children(0),
-              "sq8_search: queries_view")),
-            spark.table(strConst(children(1),
-              "sq8_search: corpus_view")),
-            strConst(children(2), "sq8_search: id_col"),
-            strConst(children(3), "sq8_search: emb_col"),
-            intConstArg(children(4), "sq8_search: m"),
-            intConstArg(children(5), "sq8_search: k"))
-          .queryExecution.analyzed
-      }))
-    ext.injectTableFunction((
-      new FunctionIdentifier("shortest_paths"),
-      new ExpressionInfo("graft.operators.Graph", "shortest_paths"),
-      (children: Seq[Expression]) => {
-        require(children.size == 7,
-          "shortest_paths expects (edges_view, a_col, b_col, w_col, " +
-            s"sources_view, src_col, max_edges), got ${children.size}")
-        val spark = org.apache.spark.sql.SparkSession.active
-        graft.operators.Graph.boundedShortestPaths(
-            spark.table(strConst(children(0),
-              "shortest_paths: edges_view")),
-            strConst(children(1), "shortest_paths: a_col"),
-            strConst(children(2), "shortest_paths: b_col"),
-            strConst(children(3), "shortest_paths: w_col"),
-            spark.table(strConst(children(4),
-              "shortest_paths: sources_view")),
-            strConst(children(5), "shortest_paths: src_col"),
-            intConstArg(children(6), "shortest_paths: max_edges"))
-          .queryExecution.analyzed
-      }))
-    ext.injectTableFunction((
-      new FunctionIdentifier("bfs_hops"),
-      new ExpressionInfo("graft.operators.Graph", "bfs_hops"),
-      (children: Seq[Expression]) => {
-        require(children.size == 6,
-          "bfs_hops expects (edges_view, a_col, b_col, sources_view, " +
-            s"src_col, max_hops), got ${children.size}")
-        val spark = org.apache.spark.sql.SparkSession.active
-        graft.operators.Graph.bfsHops(
-            spark.table(strConst(children(0), "bfs_hops: edges_view")),
-            strConst(children(1), "bfs_hops: a_col"),
-            strConst(children(2), "bfs_hops: b_col"),
-            spark.table(strConst(children(3),
-              "bfs_hops: sources_view")),
-            strConst(children(4), "bfs_hops: src_col"),
-            intConstArg(children(5), "bfs_hops: max_hops"))
-          .queryExecution.analyzed
-      }))
-    ext.injectTableFunction((
-      new FunctionIdentifier("k_core"),
-      new ExpressionInfo("graft.operators.Graph", "k_core"),
-      (children: Seq[Expression]) => {
-        require(children.size == 5,
-          "k_core expects (edges_view, a_col, b_col, k, max_rounds), " +
-            s"got ${children.size}")
-        val spark = org.apache.spark.sql.SparkSession.active
-        graft.operators.Graph.kCore(
-            spark.table(strConst(children(0), "k_core: edges_view")),
-            strConst(children(1), "k_core: a_col"),
-            strConst(children(2), "k_core: b_col"),
-            intConstArg(children(3), "k_core: k"),
-            intConstArg(children(4), "k_core: max_rounds"))
-          .queryExecution.analyzed
-      }))
-    ext.injectTableFunction((
-      new FunctionIdentifier("label_propagation"),
-      new ExpressionInfo("graft.operators.Graph", "label_propagation"),
-      (children: Seq[Expression]) => {
-        require(children.size == 4,
-          "label_propagation expects (edges_view, a_col, b_col, " +
-            s"rounds), got ${children.size}")
-        val spark = org.apache.spark.sql.SparkSession.active
-        graft.operators.Graph.labelPropagation(
-            spark.table(strConst(children(0),
-              "label_propagation: edges_view")),
-            strConst(children(1), "label_propagation: a_col"),
-            strConst(children(2), "label_propagation: b_col"),
-            intConstArg(children(3), "label_propagation: rounds"))
-          .queryExecution.analyzed
-      }))
-    ext.injectTableFunction((
-      new FunctionIdentifier("item_cooccur"),
-      new ExpressionInfo("graft.operators.Cooccur", "item_cooccur"),
-      (children: Seq[Expression]) => {
-        require(children.size == 5,
-          "item_cooccur expects (baskets_view, basket_col, item_col, " +
-            s"top_k, max_basket), got ${children.size}")
-        val spark = org.apache.spark.sql.SparkSession.active
-        graft.operators.Cooccur.itemSimilarity(
-            spark.table(strConst(children(0),
-              "item_cooccur: baskets_view")),
-            strConst(children(1), "item_cooccur: basket_col"),
-            strConst(children(2), "item_cooccur: item_col"),
-            intConstArg(children(3), "item_cooccur: top_k"),
-            intConstArg(children(4), "item_cooccur: max_basket"))
-          .queryExecution.analyzed
-      }))
-    ext.injectTableFunction((
-      new FunctionIdentifier("hist_drift"),
-      new ExpressionInfo("graft.operators.Drift", "hist_drift"),
-      (children: Seq[Expression]) => {
-        require(children.size == 4,
-          "hist_drift expects (tagged_view, value_col, is_base_col, " +
-            s"bins), got ${children.size}")
-        val spark = org.apache.spark.sql.SparkSession.active
-        import org.apache.spark.sql.functions.col
-        graft.operators.Drift.histDrift(
-            spark.table(strConst(children(0),
-              "hist_drift: tagged_view")),
-            col(strConst(children(1), "hist_drift: value_col")),
-            col(strConst(children(2), "hist_drift: is_base_col")),
-            intConstArg(children(3), "hist_drift: bins"))
-          .queryExecution.analyzed
-      }))
-    ext.injectTableFunction((
-      new FunctionIdentifier("chunk_tokens"),
-      new ExpressionInfo("graft.operators.Corpus", "chunk_tokens"),
-      (children: Seq[Expression]) => {
-        require(children.size == 5,
-          "chunk_tokens expects (docs_view, id_col, text_col, size, " +
-            s"overlap), got ${children.size}")
-        val spark = org.apache.spark.sql.SparkSession.active
-        graft.operators.Corpus.chunkTokens(
-            spark.table(strConst(children(0),
-              "chunk_tokens: docs_view")),
-            strConst(children(1), "chunk_tokens: id_col"),
-            strConst(children(2), "chunk_tokens: text_col"),
-            intConstArg(children(3), "chunk_tokens: size"),
-            intConstArg(children(4), "chunk_tokens: overlap"))
-          .queryExecution.analyzed
-      }))
-    ext.injectTableFunction((
-      new FunctionIdentifier("match_recognize"),
-      new ExpressionInfo("graft.operators.Journeys",
-        "match_recognize"),
-      (children: Seq[Expression]) => {
-        require(children.size == 7,
-          "match_recognize expects (events_view, key_col, ts_col, " +
-            "tiebreak_col, type_col, pattern, gap_sec), " +
-            s"got ${children.size}")
-        val spark = org.apache.spark.sql.SparkSession.active
-        val gap = {
-          val e = children(6)
-          require(e.foldable,
-            s"match_recognize: gap_sec must be a literal, got ${e.sql}")
-          e.eval() match {
-            case l: Long => l
-            case i: Int => i.toLong
-            case v => throw new IllegalArgumentException(
-              s"match_recognize: gap_sec must be integral, got $v")
-          }
-        }
-        graft.operators.Journeys.matchRecognize(
-            spark.table(strConst(children(0),
-              "match_recognize: events_view")),
-            strConst(children(1), "match_recognize: key_col"),
-            strConst(children(2), "match_recognize: ts_col"),
-            strConst(children(3), "match_recognize: tiebreak_col"),
-            strConst(children(4), "match_recognize: type_col"),
-            strConst(children(5), "match_recognize: pattern"), gap)
-          .queryExecution.analyzed
-      }))
-    ext.injectTableFunction((
-      new FunctionIdentifier("temperature_quotas"),
-      new ExpressionInfo("graft.operators.Splits",
-        "temperature_quotas"),
-      (children: Seq[Expression]) => {
-        require(children.size == 5,
-          "temperature_quotas expects (counts_view, key_col, " +
-            s"cnt_col, n, alpha), got ${children.size}")
-        val spark = org.apache.spark.sql.SparkSession.active
-        val n = {
-          val e = children(3)
-          require(e.foldable,
-            s"temperature_quotas: n must be a literal, got ${e.sql}")
-          e.eval() match {
-            case l: Long => l
-            case i: Int => i.toLong
-            case v => throw new IllegalArgumentException(
-              s"temperature_quotas: n must be integral, got $v")
-          }
-        }
-        val alpha = {
-          val e = children(4)
-          require(e.foldable,
-            s"temperature_quotas: alpha must be a literal, got ${e.sql}")
-          e.eval() match {
-            case d: Double => d
-            case dec: org.apache.spark.sql.types.Decimal => dec.toDouble
-            case i: Int => i.toDouble
-            case l: Long => l.toDouble
-            case v => throw new IllegalArgumentException(
-              s"temperature_quotas: alpha must be numeric, got $v")
-          }
-        }
-        graft.operators.Splits.temperatureQuotas(
-            spark.table(strConst(children(0),
-              "temperature_quotas: counts_view")),
-            strConst(children(1), "temperature_quotas: key_col"),
-            strConst(children(2), "temperature_quotas: cnt_col"),
-            n, alpha)
-          .queryExecution.analyzed
-      }))
-    ext.injectTableFunction((
-      new FunctionIdentifier("bradley_terry"),
-      new ExpressionInfo("graft.operators.Evals", "bradley_terry"),
-      (children: Seq[Expression]) => {
-        require(children.size == 5,
-          "bradley_terry expects (cmp_view, a_col, b_col, " +
-            s"win_a_col, iters), got ${children.size}")
-        val spark = org.apache.spark.sql.SparkSession.active
-        val iters = intConstArg(children(4), "bradley_terry: iters")
-        graft.operators.Evals.bradleyTerry(
-            graft.operators.Evals.orientedPairs(
-              spark.table(strConst(children(0),
-                "bradley_terry: cmp_view")),
-              strConst(children(1), "bradley_terry: a_col"),
-              strConst(children(2), "bradley_terry: b_col"),
-              strConst(children(3), "bradley_terry: win_a_col")),
-            iters)
-          .queryExecution.analyzed
-      }))
-    ext.injectTableFunction((
-      new FunctionIdentifier("personalized_pagerank"),
-      new ExpressionInfo("graft.operators.PageRank",
-        "personalized_pagerank"),
-      (children: Seq[Expression]) => {
-        require(children.size == 6,
-          "personalized_pagerank expects (edges_view, src_col, " +
-            s"dst_col, sources_view, source_col, iters), " +
-            s"got ${children.size}")
-        val spark = org.apache.spark.sql.SparkSession.active
-        import org.apache.spark.sql.functions.col
-        graft.operators.PageRank.personalizedRanks(
-            spark.table(strConst(children(0),
-              "personalized_pagerank: edges_view")),
-            strConst(children(1), "personalized_pagerank: src_col"),
-            strConst(children(2), "personalized_pagerank: dst_col"),
-            spark.table(strConst(children(3),
-              "personalized_pagerank: sources_view"))
-              .select(col(strConst(children(4),
-                "personalized_pagerank: source_col"))),
-            intConstArg(children(5), "personalized_pagerank: iters"))
-          .queryExecution.analyzed
-      }))
-    ext.injectTableFunction((
-      new FunctionIdentifier("random_walks"),
-      new ExpressionInfo("graft.operators.Graph", "random_walks"),
-      (children: Seq[Expression]) => {
-        require(children.size == 7,
-          "random_walks expects (edges_view, a_col, b_col, " +
-            "starts_view, start_col, walks_per_node, steps), " +
-            s"got ${children.size}")
-        val spark = org.apache.spark.sql.SparkSession.active
-        import org.apache.spark.sql.functions.col
-        graft.operators.Graph.randomWalks(
-            spark.table(strConst(children(0),
-              "random_walks: edges_view")),
-            strConst(children(1), "random_walks: a_col"),
-            strConst(children(2), "random_walks: b_col"),
-            spark.table(strConst(children(3),
-              "random_walks: starts_view"))
-              .select(col(strConst(children(4),
-                "random_walks: start_col"))),
-            intConstArg(children(5), "random_walks: walks_per_node"),
-            intConstArg(children(6), "random_walks: steps"))
-          .queryExecution.analyzed
-      }))
-    ext.injectTableFunction((
-      new FunctionIdentifier("modularity"),
-      new ExpressionInfo("graft.operators.Graph", "modularity"),
-      (children: Seq[Expression]) => {
-        require(children.size == 6,
-          "modularity expects (edges_view, a_col, b_col, " +
-            s"labels_view, id_col, label_col), got ${children.size}")
-        val spark = org.apache.spark.sql.SparkSession.active
-        import org.apache.spark.sql.functions.col
-        graft.operators.Graph.modularity(
-            spark.table(strConst(children(0),
-              "modularity: edges_view")),
-            strConst(children(1), "modularity: a_col"),
-            strConst(children(2), "modularity: b_col"),
-            spark.table(strConst(children(3),
-              "modularity: labels_view"))
-              .select(
-                col(strConst(children(4), "modularity: id_col"))
-                  .as("id"),
-                col(strConst(children(5), "modularity: label_col"))
-                  .as("label")))
-          .queryExecution.analyzed
-      }))
-    ext.injectTableFunction((
-      new FunctionIdentifier("core_numbers"),
-      new ExpressionInfo("graft.operators.Graph", "core_numbers"),
-      (children: Seq[Expression]) => {
-        require(children.size == 5,
-          "core_numbers expects (edges_view, a_col, b_col, max_k, " +
-            s"max_rounds), got ${children.size}")
-        val spark = org.apache.spark.sql.SparkSession.active
-        graft.operators.Graph.coreNumbers(
-            spark.table(strConst(children(0),
-              "core_numbers: edges_view")),
-            strConst(children(1), "core_numbers: a_col"),
-            strConst(children(2), "core_numbers: b_col"),
-            intConstArg(children(3), "core_numbers: max_k"),
-            intConstArg(children(4), "core_numbers: max_rounds"))
-          .queryExecution.analyzed
-      }))
-    ext.injectTableFunction((
-      new FunctionIdentifier("closeness"),
-      new ExpressionInfo("graft.operators.Graph", "closeness"),
-      (children: Seq[Expression]) => {
-        require(children.size == 5,
-          "closeness expects (edges_view, a_col, b_col, pivots, " +
-            s"max_hops), got ${children.size}")
-        val spark = org.apache.spark.sql.SparkSession.active
-        graft.operators.Graph.sampledCloseness(
-            spark.table(strConst(children(0),
-              "closeness: edges_view")),
-            strConst(children(1), "closeness: a_col"),
-            strConst(children(2), "closeness: b_col"),
-            intConstArg(children(3), "closeness: pivots"),
-            intConstArg(children(4), "closeness: max_hops"))
-          .queryExecution.analyzed
-      }))
-    ext.injectTableFunction((
-      new FunctionIdentifier("betweenness"),
-      new ExpressionInfo("graft.operators.Graph", "betweenness"),
-      (children: Seq[Expression]) => {
-        require(children.size == 5,
-          "betweenness expects (edges_view, a_col, b_col, pivots, " +
-            s"max_hops), got ${children.size}")
-        val spark = org.apache.spark.sql.SparkSession.active
-        graft.operators.Graph.sampledBetweenness(
-            spark.table(strConst(children(0),
-              "betweenness: edges_view")),
-            strConst(children(1), "betweenness: a_col"),
-            strConst(children(2), "betweenness: b_col"),
-            intConstArg(children(3), "betweenness: pivots"),
-            intConstArg(children(4), "betweenness: max_hops"))
-          .queryExecution.analyzed
-      }))
-    ext.injectTableFunction((
-      new FunctionIdentifier("parallel_rank"),
-      new ExpressionInfo("graft.operators.Ranks", "parallel_rank"),
-      (children: Seq[Expression]) => {
-        require(children.size == 3 || children.size == 4,
-          "parallel_rank expects (view, group_cols_csv, " +
-            "order_cols_csv[, out_col]), got " +
-            s"${children.size}")
-        val spark = org.apache.spark.sql.SparkSession.active
-        graft.operators.Ranks.parallelRank(
-            spark.table(strConst(children(0), "parallel_rank: view")),
-            strConst(children(1), "parallel_rank: group_cols_csv")
-              .split(",").map(_.trim).toSeq,
-            strConst(children(2), "parallel_rank: order_cols_csv")
-              .split(",").map(_.trim).toSeq,
-            if (children.size == 4)
-              strConst(children(3), "parallel_rank: out_col")
-            else "rank")
-          .queryExecution.analyzed
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("vec_dot"),
-      new ExpressionInfo(classOf[VecDot].getName, "vec_dot"),
-      (children: Seq[Expression]) => {
-        require(children.size == 2,
-          s"vec_dot expects 2 arguments, got ${children.size}")
-        VecDot(children.head, children(1))
-      }))
-    // Spark's own runtime-filter bloom kernels, exposed to the SQL
-    // surface (they back InjectRuntimeFilter but are not registered
-    // as SQL functions): bloom_agg(xxhash64(k)[, est_items]) builds
-    // the filter as a binary aggregate, bloom_might_contain(b, h)
-    // probes it — the explicit pre-shuffle semi-join pruning a user
-    // composes when the optimizer's automatic injection can't see
-    // the join (see operators.BloomJoin).
-    ext.injectFunction((
-      new FunctionIdentifier("unicode_normalize"),
-      new ExpressionInfo(classOf[UnicodeNormalize].getName,
-        "unicode_normalize"),
-      (children: Seq[Expression]) => {
-        require(children.size == 2,
-          "unicode_normalize expects (str, 'NFC'|'NFD'|'NFKC'|" +
-            s"'NFKD'), got ${children.size}")
-        val f = children(1)
-        require(f.foldable,
-          s"unicode_normalize: form must be a literal, got ${f.sql}")
-        UnicodeNormalize(children.head,
-          UnicodeNormalize.formOf(String.valueOf(f.eval())))
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("bloom_agg"),
-      new ExpressionInfo(
-        "org.apache.spark.sql.catalyst.expressions.aggregate" +
-          ".BloomFilterAggregate", "bloom_agg"),
-      (children: Seq[Expression]) => {
-        require(children.size == 1 || children.size == 2,
-          s"bloom_agg expects (hash[, est_items]), got ${children.size}")
-        import org.apache.spark.sql.catalyst.expressions.aggregate
-          .BloomFilterAggregate
-        if (children.size == 1) new BloomFilterAggregate(children.head)
-        else {
-          val e = children(1)
-          require(e.foldable,
-            s"bloom_agg: est_items must be a literal, got ${e.sql}")
-          val est = e.eval() match {
-            case l: Long => l
-            case i: Int => i.toLong
-            case v => throw new IllegalArgumentException(
-              s"bloom_agg: est_items must be integral, got $v")
-          }
-          new BloomFilterAggregate(children.head, est)
-        }
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("bloom_might_contain"),
-      new ExpressionInfo(
-        "org.apache.spark.sql.catalyst.expressions" +
-          ".BloomFilterMightContain", "bloom_might_contain"),
-      (children: Seq[Expression]) => {
-        require(children.size == 2,
-          "bloom_might_contain expects (bloom, hash), " +
-            s"got ${children.size}")
-        org.apache.spark.sql.catalyst.expressions
-          .BloomFilterMightContain(children.head, children(1))
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("shingles"),
-      new ExpressionInfo(classOf[ShingleNGrams].getName, "shingles"),
-      (children: Seq[Expression]) => {
-        require(children.size == 3,
-          s"shingles expects (tokens, n, distinct), got ${children.size}")
-        // n and distinct parameterize codegen, so they must be
-        // compile-time constants — reject columns/NULLs/wrong types
-        // with a clear message instead of a raw eval()/cast crash.
-        def const[T](e: Expression, what: String,
-            pf: PartialFunction[Any, T]): T = {
-          require(e.foldable,
-            s"shingles: $what must be a literal, got ${e.sql}")
-          val v = e.eval()
-          require(v != null && pf.isDefinedAt(v),
-            s"shingles: $what must be a non-null ${what} literal, " +
-              s"got ${e.sql}")
-          pf(v)
-        }
-        ShingleNGrams(children.head,
-          const[Int](children(1), "int n",
-            { case i: Int => i; case l: Long if l.isValidInt => l.toInt }),
-          const[Boolean](children(2), "boolean distinct",
-            { case b: Boolean => b }))
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("hilbert2d"),
-      new ExpressionInfo(classOf[Hilbert2D].getName, "hilbert2d"),
-      (children: Seq[Expression]) => {
-        require(children.size == 3,
-          s"hilbert2d expects (x, y, bits), got ${children.size}")
-        val bitsExpr = children(2)
-        require(bitsExpr.foldable,
-          s"hilbert2d: bits must be a literal, got ${bitsExpr.sql}")
-        val bits = bitsExpr.eval() match {
-          case i: Int => i
-          case l: Long if l.isValidInt => l.toInt
-          case v => throw new IllegalArgumentException(
-            s"hilbert2d: bits must be an int literal, got $v")
-        }
-        Hilbert2D(children.head, children(1), bits)
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("hilbertn"),
-      new ExpressionInfo(classOf[HilbertN].getName, "hilbertn"),
-      (children: Seq[Expression]) => {
-        require(children.size >= 2,
-          s"hilbertn expects (bits, x1, ..., xn), got ${children.size}")
-        val bitsExpr = children.head
-        require(bitsExpr.foldable,
-          s"hilbertn: bits must be a literal, got ${bitsExpr.sql}")
-        val bits = bitsExpr.eval() match {
-          case i: Int => i
-          case l: Long if l.isValidInt => l.toInt
-          case v => throw new IllegalArgumentException(
-            s"hilbertn: bits must be an int literal, got $v")
-        }
-        HilbertN(children.tail, bits)
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("pq_assign"),
-      new ExpressionInfo(classOf[PqAssign].getName, "pq_assign"),
-      (children: Seq[Expression]) => {
-        require(children.size == 4,
-          s"pq_assign expects (emb, codebook, subDim, k), got " +
-            s"${children.size}")
-        def intConst(e: Expression, what: String): Int = {
-          require(e.foldable,
-            s"pq_assign: $what must be a literal, got ${e.sql}")
-          e.eval() match {
-            case i: Int => i
-            case l: Long if l.isValidInt => l.toInt
-            case v => throw new IllegalArgumentException(
-              s"pq_assign: $what must be an int literal, got $v")
-          }
-        }
-        val cbE = children(1)
-        require(cbE.foldable,
-          s"pq_assign: codebook must be a nested float-array " +
-            s"literal, got ${cbE.sql}")
-        val ad = cbE.eval()
-          .asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
-        val cb = (0 until ad.numElements())
-          .map(i => ad.getArray(i).toFloatArray()).toArray
-        PqAssign(children.head, cb,
-          intConst(children(2), "subDim"), intConst(children(3), "k"))
-      }))
+    tableFunctions.foreach(f => ext.injectTableFunction((
+      FunctionIdentifier(f.name), new ExpressionInfo(f.owner, f.name),
+      (c: Seq[Expression]) => f.build(new Args(f, c)).queryExecution.analyzed)))
+    scalarFunctions.foreach(f => ext.injectFunction((
+      FunctionIdentifier(f.name), new ExpressionInfo(f.owner, f.name),
+      (c: Seq[Expression]) => f.build(new Args(f, c)))))
     ext.injectOptimizerRule(_ => VectorizeDotProduct)
     // A global collect_list over explode of a one-row local relation
     // becomes one array expression, so the Metlink snapshot path
@@ -683,4 +56,192 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // called; gated by spark.graft.mv.rewrite.
     ext.injectOptimizerRule(_ => graft.plans.MvRewrite)
   }
+}
+
+object GraftExtensions {
+
+  /** One SQL function: its name, the class its `ExpressionInfo`
+    * names, its comma-separated parameters and a builder over the
+    * decoded arguments. A parameter ending in `?` is optional; one
+    * ending in `...` is a variadic tail of at least one argument. */
+  private[graft] final case class Fn[T](name: String, owner: String,
+      params: String)(val build: Args => T) {
+    private val names = params.split(",").map(_.trim).toSeq
+    val minArgs: Int = names.count(!_.endsWith("?"))
+    val maxArgs: Int =
+      if (names.last.endsWith("...")) Int.MaxValue else names.size
+    def paramName(i: Int): String =
+      names(math.min(i, names.size - 1)).stripSuffix("?").stripSuffix("...")
+  }
+
+  /** The arguments of one call. View and column names, sizes and
+    * codebooks parameterize the PLAN (or codegen), so they must be
+    * literals; this decoder is the only place that checks arity,
+    * foldability, null and type, and every message names the
+    * parameter. */
+  private[graft] final class Args(fn: Fn[_], args: Seq[Expression]) {
+    require(args.size >= fn.minArgs && args.size <= fn.maxArgs,
+      s"${fn.name} expects (${fn.params}), got ${args.size}")
+
+    def has(i: Int): Boolean = i < args.size
+    def expr(i: Int): Expression = args(i)
+    def rest(i: Int): Seq[Expression] = args.drop(i)
+    def str(i: Int): String =
+      lit(i, "a string") { case s: UTF8String => s.toString }
+    def csv(i: Int): Seq[String] = str(i).split(",").map(_.trim).toSeq
+    def table(i: Int): DataFrame = SparkSession.active.table(str(i))
+    def long(i: Int): Long = lit(i, "an integer")(integral)
+    def int(i: Int): Int =
+      lit(i, "an int")(integral.andThen { case l if l.isValidInt => l.toInt })
+    def double(i: Int): Double = lit(i, "a numeric") {
+      case n: java.lang.Number => n.doubleValue
+      case d: Decimal => d.toDouble
+    }
+    def bool(i: Int): Boolean = lit(i, "a boolean") { case b: Boolean => b }
+    /** A nested numeric array, cast to FLOAT element-wise. */
+    def floatMatrix(i: Int): Array[Array[Float]] = {
+      val t = args(i).dataType
+      val numeric = t match {
+        case ArrayType(ArrayType(_: NumericType, _), _) => true
+        case _ => false
+      }
+      lit(i, "a nested numeric array") { case m: ArrayData if numeric =>
+        val f = Cast(Literal(m, t), ArrayType(ArrayType(FloatType))).eval()
+          .asInstanceOf[ArrayData]
+        Array.tabulate(f.numElements())(r => f.getArray(r).toFloatArray())
+      }
+    }
+
+    private def lit[T](i: Int, kind: String)(pf: PartialFunction[Any, T]): T = {
+      val e = args(i)
+      val what = s"${fn.name}: ${fn.paramName(i)}"
+      require(e.foldable, s"$what must be a literal, got ${e.sql}")
+      val v = e.eval()
+      require(v != null, s"$what must be a non-null literal, got ${e.sql}")
+      pf.applyOrElse(v, (_: Any) => throw new IllegalArgumentException(
+        s"$what must be $kind literal, got ${e.sql}"))
+    }
+  }
+
+  private val integral: PartialFunction[Any, Long] = {
+    case b: Byte => b.toLong
+    case s: Short => s.toLong
+    case i: Int => i.toLong
+    case l: Long => l
+  }
+
+  /** Whole-operator TABLE functions: `SELECT * FROM name(...)`. */
+  private[graft] val tableFunctions: Seq[Fn[DataFrame]] = Seq(
+    Fn("cdc_merge", "graft.operators.Cdc",
+        "log_view, key_cols_csv, seq_col, op_col, keep_tombstones")(a =>
+      Cdc.mergeLatest(a.table(0), a.csv(1), a.str(2), a.str(3), a.bool(4))),
+    Fn("attribution_credits", "graft.operators.Attribution",
+        "events_view, user_col, id_col, ts_col, type_col, value_col, " +
+          "conv_type, touch_types_csv, lookback_micros")(a =>
+      Attribution.credits(a.table(0), a.str(1), a.str(2), a.str(3),
+        a.str(4), a.str(5), a.str(6), a.csv(7), a.long(8))),
+    Fn("sq8_search", "graft.operators.Sq8",
+        "queries_view, corpus_view, id_col, emb_col, m, k")(a =>
+      Sq8.searchTopK(a.table(0), a.table(1), a.str(2), a.str(3), a.int(4),
+        a.int(5))),
+    Fn("shortest_paths", "graft.operators.Graph",
+        "edges_view, a_col, b_col, w_col, sources_view, src_col, " +
+          "max_edges")(a =>
+      Graph.boundedShortestPaths(a.table(0), a.str(1), a.str(2), a.str(3),
+        a.table(4), a.str(5), a.int(6))),
+    Fn("bfs_hops", "graft.operators.Graph",
+        "edges_view, a_col, b_col, sources_view, src_col, max_hops")(a =>
+      Graph.bfsHops(a.table(0), a.str(1), a.str(2), a.table(3), a.str(4),
+        a.int(5))),
+    Fn("k_core", "graft.operators.Graph",
+        "edges_view, a_col, b_col, k, max_rounds")(a =>
+      Graph.kCore(a.table(0), a.str(1), a.str(2), a.int(3), a.int(4))),
+    Fn("label_propagation", "graft.operators.Graph",
+        "edges_view, a_col, b_col, rounds")(a =>
+      Graph.labelPropagation(a.table(0), a.str(1), a.str(2), a.int(3))),
+    Fn("item_cooccur", "graft.operators.Cooccur",
+        "baskets_view, basket_col, item_col, top_k, max_basket")(a =>
+      Cooccur.itemSimilarity(a.table(0), a.str(1), a.str(2), a.int(3),
+        a.int(4))),
+    Fn("hist_drift", "graft.operators.Drift",
+        "tagged_view, value_col, is_base_col, bins")(a =>
+      Drift.histDrift(a.table(0), col(a.str(1)), col(a.str(2)), a.int(3))),
+    Fn("chunk_tokens", "graft.operators.Corpus",
+        "docs_view, id_col, text_col, size, overlap")(a =>
+      Corpus.chunkTokens(a.table(0), a.str(1), a.str(2), a.int(3),
+        a.int(4))),
+    // the SQL:2016 MATCH_RECOGNIZE shape: contiguous pattern +
+    // quantifiers + gap policy, skip past last row
+    Fn("match_recognize", "graft.operators.Journeys",
+        "events_view, key_col, ts_col, tiebreak_col, type_col, pattern, " +
+          "gap_sec")(a =>
+      Journeys.matchRecognize(a.table(0), a.str(1), a.str(2), a.str(3),
+        a.str(4), a.str(5), a.long(6))),
+    Fn("temperature_quotas", "graft.operators.Splits",
+        "counts_view, key_col, cnt_col, n, alpha")(a =>
+      Splits.temperatureQuotas(a.table(0), a.str(1), a.str(2), a.long(3),
+        a.double(4))),
+    Fn("bradley_terry", "graft.operators.Evals",
+        "cmp_view, a_col, b_col, win_a_col, iters")(a =>
+      Evals.bradleyTerry(Evals.orientedPairs(a.table(0), a.str(1),
+        a.str(2), a.str(3)), a.int(4))),
+    Fn("personalized_pagerank", "graft.operators.PageRank",
+        "edges_view, src_col, dst_col, sources_view, source_col, iters")(a =>
+      PageRank.personalizedRanks(a.table(0), a.str(1), a.str(2),
+        a.table(3).select(col(a.str(4))), a.int(5))),
+    Fn("random_walks", "graft.operators.Graph",
+        "edges_view, a_col, b_col, starts_view, start_col, " +
+          "walks_per_node, steps")(a =>
+      Graph.randomWalks(a.table(0), a.str(1), a.str(2),
+        a.table(3).select(col(a.str(4))), a.int(5), a.int(6))),
+    Fn("modularity", "graft.operators.Graph",
+        "edges_view, a_col, b_col, labels_view, id_col, label_col")(a =>
+      Graph.modularity(a.table(0), a.str(1), a.str(2), a.table(3)
+        .select(col(a.str(4)).as("id"), col(a.str(5)).as("label")))),
+    Fn("core_numbers", "graft.operators.Graph",
+        "edges_view, a_col, b_col, max_k, max_rounds")(a =>
+      Graph.coreNumbers(a.table(0), a.str(1), a.str(2), a.int(3),
+        a.int(4))),
+    Fn("closeness", "graft.operators.Graph",
+        "edges_view, a_col, b_col, pivots, max_hops")(a =>
+      Graph.sampledCloseness(a.table(0), a.str(1), a.str(2), a.int(3),
+        a.int(4))),
+    Fn("betweenness", "graft.operators.Graph",
+        "edges_view, a_col, b_col, pivots, max_hops")(a =>
+      Graph.sampledBetweenness(a.table(0), a.str(1), a.str(2), a.int(3),
+        a.int(4))),
+    // the low-cardinality-group escape hatch from the
+    // single-task-per-group window-rank trap
+    Fn("parallel_rank", "graft.operators.Ranks",
+        "view, group_cols_csv, order_cols_csv, out_col?")(a =>
+      Ranks.parallelRank(a.table(0), a.csv(1), a.csv(2),
+        if (a.has(3)) a.str(3) else "rank")))
+
+  /** Scalar and aggregate functions: native Catalyst kernels, plus
+    * Spark's own runtime-filter bloom kernels, which back
+    * InjectRuntimeFilter but are not registered as SQL functions:
+    * `bloom_agg(xxhash64(k)[, est_items])` builds the filter,
+    * `bloom_might_contain(b, h)` probes it (see operators.BloomJoin). */
+  private[graft] val scalarFunctions: Seq[Fn[Expression]] = Seq(
+    Fn("vec_dot", classOf[VecDot].getName, "a, b")(a =>
+      VecDot(a.expr(0), a.expr(1))),
+    Fn("unicode_normalize", classOf[UnicodeNormalize].getName,
+        "str, form")(a =>
+      UnicodeNormalize(a.expr(0), UnicodeNormalize.formOf(a.str(1)))),
+    Fn("bloom_agg", classOf[BloomFilterAggregate].getName,
+        "hash, est_items?")(a =>
+      if (a.has(1)) new BloomFilterAggregate(a.expr(0), a.long(1))
+      else new BloomFilterAggregate(a.expr(0))),
+    Fn("bloom_might_contain", classOf[BloomFilterMightContain].getName,
+        "bloom, hash")(a =>
+      BloomFilterMightContain(a.expr(0), a.expr(1))),
+    Fn("shingles", classOf[ShingleNGrams].getName, "tokens, n, distinct")(a =>
+      ShingleNGrams(a.expr(0), a.int(1), a.bool(2))),
+    Fn("hilbert2d", classOf[Hilbert2D].getName, "x, y, bits")(a =>
+      Hilbert2D(a.expr(0), a.expr(1), a.int(2))),
+    Fn("hilbertn", classOf[HilbertN].getName, "bits, x...")(a =>
+      HilbertN(a.rest(1), a.int(0))),
+    Fn("pq_assign", classOf[PqAssign].getName,
+        "emb, codebook, subDim, k")(a =>
+      PqAssign(a.expr(0), a.floatMatrix(1), a.int(2), a.int(3))))
 }

@@ -82,7 +82,10 @@ object Tables {
     val spark = df.sparkSession
     val minTaskBytes = spark.conf
       .getOption("spark.graft.fanout.minBytesPerTask")
-      .map(_.toLong).getOrElse(65536L)
+      .map(v => v.trim.toLongOption.filter(_ >= 1).getOrElse(
+        throw new IllegalArgumentException(
+          "spark.graft.fanout.minBytesPerTask must be an integer >= 1, " +
+            s"got '$v'"))).getOrElse(65536L)
     // (effective source splits, byte-budget task bound); a hint
     // carries no byte signal — the caller asserts the width, so only
     // the parallelism ceiling applies to it

@@ -84,16 +84,21 @@ object Ckpt {
     *
     * Metrics must be Long-valued total aggregates (`count`, `sum`
     * over integral columns); a null result (e.g. `sum` over an empty
-    * frame) reads as 0.
+    * frame) reads as 0, and any other value type (an `avg`'s Double)
+    * fails naming the metric's index.
     *
     * @return the cut frame plus one Long per metric, in order */
   def cutCounted(df: DataFrame, metrics: Column*): (DataFrame, Seq[Long]) = {
     val (cutDf, got) = cutObserved(df, metrics: _*)
-    (cutDf, got.map {
-      case null => 0L
-      case l: java.lang.Long => l.longValue()
-      case d: java.math.BigDecimal => d.longValueExact()
-      case other => other.toString.toLong
+    (cutDf, got.zipWithIndex.map {
+      case (null, _) => 0L
+      case (n @ (_: java.lang.Long | _: java.lang.Integer |
+          _: java.lang.Short | _: java.lang.Byte), _) =>
+        n.asInstanceOf[Number].longValue()
+      case (d: java.math.BigDecimal, _) => d.longValueExact()
+      case (other, i) => throw new IllegalArgumentException(
+        s"Ckpt.cutCounted: metric $i must be a Long-valued aggregate, " +
+          s"got ${other.getClass.getName} ($other)")
     })
   }
 

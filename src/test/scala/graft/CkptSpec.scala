@@ -75,4 +75,13 @@ class CkptSpec extends SparkSpec {
     assert(Components.connectedComponents(nodes, "id", edges, "a", "b")
       .count() == 11L)
   }
+
+  test("cutCounted rejects a non-integral metric naming its index " +
+      "and class") {
+    val err = intercept[IllegalArgumentException] {
+      Ckpt.cutCounted(edges, count(lit(1)), avg(col("a")))
+    }
+    assert(err.getMessage.contains("metric 1") &&
+      err.getMessage.contains("java.lang.Double"), err.getMessage)
+  }
 }

@@ -238,4 +238,22 @@ class OperatorSpec extends SparkSpec {
       .as[Int].collect()
     assert(b(0) == b(1) && b(0) >= 0 && b(0) < 16)
   }
+
+  // ---- Tables.fanOut ----------------------------------------------
+
+  test("fanOut: a malformed or non-positive minBytesPerTask fails " +
+      "naming the key; 1 is valid") {
+    val key = "spark.graft.fanout.minBytesPerTask"
+    val df = Seq(1L, 2L, 3L).toDF("x")
+    try {
+      Seq("64KB", "0", "-5", "").foreach { v =>
+        spark.conf.set(key, v)
+        val err = intercept[IllegalArgumentException](Tables.fanOut(df))
+        assert(err.getMessage.contains(key) &&
+          err.getMessage.contains(s"'$v'"), err.getMessage)
+      }
+      spark.conf.set(key, "1")
+      assert(Tables.fanOut(df).count() === 3L)
+    } finally spark.conf.unset(key)
+  }
 }

@@ -125,4 +125,22 @@ class PqSpec extends SparkSpec {
       .collect().map(_.getSeq[Float](2).toList).toList
     assert(ref === List(List(1000.0f, 1000.0f), List(1000.0f, 1000.0f)))
   }
+
+  test("pq_assign through SQL yields the codes Pq.encode produces") {
+    corpus.createOrReplaceTempView("pq_corpus_sql")
+    // cb's rows in (j, m) order, as integer literals: the codebook
+    // argument takes any nested numeric array
+    val viaSql = spark.sql(
+      "SELECT id, pq_assign(emb, array(array(0, 0), array(5, 5), " +
+        "array(10, 10), array(0, 0)), 2, 2) AS pq FROM pq_corpus_sql")
+      .collect().flatMap { r =>
+        val pq = r.getSeq[Long](1)
+        Seq((r.getLong(0), 0, pq(0)), (r.getLong(0), 1, pq(2)))
+      }.sorted.toList
+    val viaApi = Pq.encode(corpus, "id", "emb", cb, subDim = 2)
+      .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2)))
+      .sorted.toList
+    assert(viaSql === viaApi)
+    assert(viaSql.size === 10)
+  }
 }

@@ -177,6 +177,42 @@ class SqlTableFnSpec extends SparkSpec {
     }
     assert(err.getMessage.contains("keep_tombstones"),
       s"unexpected error: ${err.getMessage}")
+    // a column name must be a STRING literal, not any literal
+    Seq((1L, 2L)).toDF("a", "b").createOrReplaceTempView("kc_typed_sql")
+    val colErr = intercept[Exception] {
+      spark.sql("SELECT * FROM k_core('kc_typed_sql', 1, 'b', 2, 3)")
+        .collect()
+    }
+    assert(colErr.getMessage.contains("k_core: a_col must be a string"),
+      s"unexpected error: ${colErr.getMessage}")
+    // a numeric parameter takes any numeric literal, FLOAT included
+    Seq(("a", 100L), ("b", 10000L)).toDF("src", "c")
+      .createOrReplaceTempView("tq_float_sql")
+    val quotas = spark.sql(
+      "SELECT key, quota FROM temperature_quotas('tq_float_sql', 'src', " +
+        "'c', 110, CAST(0.5 AS FLOAT))").as[(String, Long)].collect().toMap
+    assert(quotas === Map("a" -> 10L, "b" -> 100L))
+  }
+
+  test("every registered SQL function rejects a wrong arity by name " +
+      "and parameter list") {
+    val fns = GraftExtensions.tableFunctions.map(f => (f, true)) ++
+      GraftExtensions.scalarFunctions.map(f => (f, false))
+    assert(fns.size === 28)
+    fns.foreach { case (f, isTable) =>
+      // one past the last parameter, or none at all for a variadic
+      val n = if (f.maxArgs == Int.MaxValue) 0 else f.maxArgs + 1
+      val args = Seq.fill(n)("1").mkString(", ")
+      val sql =
+        if (isTable) s"SELECT * FROM ${f.name}($args)"
+        else s"SELECT ${f.name}($args)"
+      val err = intercept[Exception](spark.sql(sql).collect())
+      assert(err.getMessage.contains(s"${f.name} expects (${f.params})"),
+        s"$sql: ${err.getMessage}")
+    }
+    assert(GraftExtensions.tableFunctions.find(_.name == "cdc_merge")
+      .get.params === "log_view, key_cols_csv, seq_col, op_col, " +
+        "keep_tombstones")
   }
 
   test("item_cooccur from SQL plans identically to the API form") {

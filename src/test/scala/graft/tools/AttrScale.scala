@@ -19,7 +19,7 @@ import graft.operators.{Attribution, Journeys}
   * answers the question that matters: is the operator linear when
   * the data is?
   *
-  * Usage: runMain graft.AttrScale [n] [reps]
+  * Usage: Test/runMain graft.AttrScale [n] [reps]
   * Prints one JSON line per rep per kernel plus summary minima.
   */
 object AttrScale {

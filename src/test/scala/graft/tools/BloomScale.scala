@@ -17,7 +17,7 @@ import graft.operators.BloomJoin
   * asserts result identity in-run — the speedup is only reportable
   * because the answer is provably the same.
   *
-  * Usage: runMain graft.BloomScale [n] [selPct] [reps]
+  * Usage: Test/runMain graft.BloomScale [n] [selPct] [reps]
   */
 object BloomScale {
 

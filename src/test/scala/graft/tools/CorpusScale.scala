@@ -20,7 +20,7 @@ import graft.operators.{Corpus, Dedup, Splits, TextOps}
   * (Σ|hash-bucket|² must scale like a real corpus, the ScaleUp
   * documents rule).
   *
-  * Usage: runMain graft.CorpusScale <sfDir> [reps] [label]
+  * Usage: Test/runMain graft.CorpusScale <sfDir> [reps] [label]
   * Prints one JSON line per rep plus a min summary.
   */
 object CorpusScale {

@@ -13,7 +13,7 @@ import graft.operators.Importance
   * (token-shuffled replicas: vocabulary and gram diversity grow with
   * size, the documents rule every corpus probe follows).
   *
-  * Usage: runMain graft.CurationScale [docsDir] [reps] [label]
+  * Usage: Test/runMain graft.CurationScale [docsDir] [reps] [label]
   * Prints one JSON line per rep plus a summary min.
   */
 object CurationScale {

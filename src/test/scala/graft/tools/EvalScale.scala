@@ -24,7 +24,7 @@ import graft.operators.Evals
   *    the cumulative window stays partitioned per slice (bounded
   *    histogram state, slices in parallel).
   *
-  * Usage: runMain graft.EvalScale [n] [reps] [ops-csv]
+  * Usage: Test/runMain graft.EvalScale [n] [reps] [ops-csv]
   * (ops-csv ⊆ bt,auc,kendall; default all)
   */
 object EvalScale {

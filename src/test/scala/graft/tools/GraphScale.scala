@@ -17,7 +17,7 @@ import graft.operators.Graph
   * peel fractions and community structure stay comparable across
   * decades and wall growth isolates the ENGINE's scaling.
   *
-  * Usage: runMain graft.GraphScale [n] [reps] [ops-csv]
+  * Usage: Test/runMain graft.GraphScale [n] [reps] [ops-csv]
   * (ops-csv ⊆ kcore,lpa,walks,scc,temporal,linkpred,adamic; default all)
   * Prints one JSON line per rep per operator plus summary minima.
   */

@@ -32,8 +32,8 @@ import graft.operators.Cdc
   * Every maintained result is checksum-compared to the recompute —
   * a probe that got faster by being wrong would fail loudly.
   *
-  * Usage: runMain graft.IvmScale [nCsv] [deltaN] [reps]
-  * e.g. runMain graft.IvmScale 2000000,20000000 20000 3
+  * Usage: Test/runMain graft.IvmScale [nCsv] [deltaN] [reps]
+  * e.g. Test/runMain graft.IvmScale 2000000,20000000 20000 3
   */
 object IvmScale {
 

@@ -31,7 +31,7 @@ import graft.operators.{Dedup, EntityRes}
   *    3 from each other); 'z'/'y' substitutions leave the hex
   *    alphabet so chance matches are impossible.
   *
-  * Usage: runMain graft.JoinScale [n] [reps] [ops-csv]
+  * Usage: Test/runMain graft.JoinScale [n] [reps] [ops-csv]
   * (ops-csv ⊆ setsim,ed2; default both)
   * Prints one JSON line per rep per operator plus summary minima.
   */

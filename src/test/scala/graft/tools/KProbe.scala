@@ -13,7 +13,7 @@ import org.apache.spark.sql.SparkSession
   * per query; kernel 82.1 s build+read, 0.85 s per subsequent read
   * (BENCH_lp_kernel_oneshot_r15.json, NOTES_r15).
   *
-  * Usage: tools/run_main.sh graft.KProbe /root/repo/scaledata/sf1 */
+  * Usage: tools/run_main.sh graft.KProbe <sfDir> */
 object KProbe {
   def main(args: Array[String]): Unit = {
     val d = args(0)

@@ -21,7 +21,7 @@ import graft.operators.{EntityRes, Geo}
   *  A fixed key space would manufacture quadratic blowup the way
   *  the media fixtures' fixed 50 groups would (MediaScale's rule).
   *
-  * Usage: runMain graft.LinkageScale [n] [reps]
+  * Usage: Test/runMain graft.LinkageScale [n] [reps]
   * Prints one JSON line per rep per operator plus summary minima.
   */
 object LinkageScale {

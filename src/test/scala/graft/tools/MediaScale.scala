@@ -26,7 +26,7 @@ import graft.operators.{Components, Multimodal}
   * [[Multimodal.dhashNearDupPairs]] per modality,
   * [[Components.connectedComponents]] once over the union.
   *
-  * Usage: runMain graft.MediaScale [nItems] [reps]
+  * Usage: Test/runMain graft.MediaScale [nItems] [reps]
   * Prints one JSON line per rep plus a summary min.
   */
 object MediaScale {

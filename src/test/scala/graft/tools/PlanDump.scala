@@ -9,7 +9,7 @@ import org.apache.spark.sql.SparkSession
   * queries to `<outDir>/<qname><suffix>.txt` — the committed
   * before/after plan evidence the optimization rounds require.
   *
-  * Usage: runMain graft.PlanDump <sfDir> <outDir> <suffix> q1,q2,...
+  * Usage: Test/runMain graft.PlanDump <sfDir> <outDir> <suffix> q1,q2,...
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {

@@ -29,7 +29,7 @@ import graft.operators.{Planted, Pq, Similarity, Sq8}
   * probes and ground truth, so its at-scale recall/latency land in
   * the same artifact line.
   *
-  * Usage: runMain graft.PlantedRecall [nClusters] [perCluster] [nQueries]
+  * Usage: Test/runMain graft.PlantedRecall [nClusters] [perCluster] [nQueries]
   * (defaults 1000 x 1000 = 1M vectors, 50 queries)
   */
 object PlantedRecall {

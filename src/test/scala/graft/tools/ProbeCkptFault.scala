@@ -49,8 +49,8 @@ import graft.operators.{Ckpt, Components, Graph}
   * (localCheckpoint) vs SET (reliable, local FS) so the knob's price
   * is a measured number per scale, not prose.
   *
-  * Usage: runMain graft.ProbeCkptFault fault
-  *        runMain graft.ProbeCkptFault overhead <sfDir> <reps>
+  * Usage: Test/runMain graft.ProbeCkptFault fault
+  *        Test/runMain graft.ProbeCkptFault overhead <sfDir> <reps>
   */
 object ProbeCkptFault {
 
@@ -102,8 +102,10 @@ object ProbeCkptFault {
 
   private def faultMode(): Unit = {
     val ckptDir = Files.createTempDirectory("graft-ckpt-fault").toString
-    val classesDir = Paths.get("target/scala-2.13/classes")
-      .toAbsolutePath.toString
+    // the probe's own closures live in test-classes
+    val classesDir = Seq("classes", "test-classes")
+      .map(d => Paths.get(s"target/scala-2.13/$d").toAbsolutePath.toString)
+      .mkString(java.io.File.pathSeparator)
     val spark = Tables.configure(SparkSession.builder()
       .master("local-cluster[2,2,2048]")
       .config("spark.sql.shuffle.partitions", "8")

@@ -9,7 +9,7 @@ import org.apache.spark.sql.SparkSession
   * else" share is the per-round fixed overhead the optimization
   * round targets; for scan-bound queries task time dominates.
   *
-  * Usage: runMain graft.ProbeOverhead <sfDir> <reps> <q1,q2,...>
+  * Usage: Test/runMain graft.ProbeOverhead <sfDir> <reps> <q1,q2,...>
   * Prints per query: wall s, #jobs, #stages, #tasks, sum task time s,
   * sum task time / cpus (the perfect-parallelism floor).
   */

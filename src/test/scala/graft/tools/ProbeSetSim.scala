@@ -10,7 +10,7 @@ import graft.operators.Dedup
   * pairs separately and prints candidate/match counts, so prefix
   * filter changes can be attributed to enumeration vs verification.
   *
-  * Usage: runMain graft.ProbeSetSim [sfDir] [reps] [maxCandidates]
+  * Usage: Test/runMain graft.ProbeSetSim [sfDir] [reps] [maxCandidates]
   *          [stages]
   * `maxCandidates` (optional) is an IN-RUN tripwire: the probe
   * FAILS if the candidate frame exceeds it — wired to the committed

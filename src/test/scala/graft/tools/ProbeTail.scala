@@ -23,7 +23,7 @@ import graft.operators.{Geo, Quality}
   *    with and without the exact legs (`exact = false` is the
   *    documented 100 TB form).
   *
-  * Usage: runMain graft.ProbeTail [sfDir] [reps]
+  * Usage: Test/runMain graft.ProbeTail [sfDir] [reps]
   */
 object ProbeTail {
   def main(args: Array[String]): Unit = {

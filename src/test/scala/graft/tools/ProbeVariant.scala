@@ -28,7 +28,7 @@ import org.apache.spark.sql.functions._
   * every stage's sf1/sf0.1 ratio sits near 10× (row ratio) the r13
   * pool reading was contention, not an engine exponent.
   *
-  * Usage: runMain graft.ProbeVariant [sfDir] [reps]
+  * Usage: Test/runMain graft.ProbeVariant [sfDir] [reps]
   */
 object ProbeVariant {
   def main(args: Array[String]): Unit = {

@@ -16,7 +16,7 @@ import org.apache.spark.sql.SparkSession
   * sortWithinPartitions` (same deterministic output for small
   * results) avoids entirely.
   *
-  * Usage: runMain graft.ProbeWriteTail <sfDir> <reps> <q1,q2,...>
+  * Usage: Test/runMain graft.ProbeWriteTail <sfDir> <reps> <q1,q2,...>
   */
 object ProbeWriteTail {
   def main(args: Array[String]): Unit = {

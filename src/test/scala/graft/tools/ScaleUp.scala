@@ -32,7 +32,7 @@ import org.apache.spark.sql.functions._
   *    correctness fixtures read only replica 0 while full scans see
   *    the whole corpus.
   *
-  * Usage: runMain graft.ScaleUp [srcDir] [dstDir] [mult] [tables]
+  * Usage: Test/runMain graft.ScaleUp [srcDir] [dstDir] [mult] [tables]
   *          [mode]
   * `tables` (optional, comma-separated) restricts generation to a
   * subset — e.g. only the facts a targeted scale bench reads — so a

@@ -18,7 +18,7 @@ OUT="/tmp/fuzzverify_s${SEED}_sf${SF}"
 rm -rf "$DATA" "$OUT"
 python3 tools/regen_testdata.py --seed "$SEED" --sf "$SF" --out "$DATA"
 if [ -n "$SUBSET" ]; then
-  sbt -batch "runMain graft.VerifySome $DATA $OUT $SUBSET"
+  sbt -batch "runMain graft.Verify $DATA $OUT $SUBSET"
 else
   sbt -batch "runMain graft.Verify $DATA $OUT"
 fi

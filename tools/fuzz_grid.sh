@@ -27,7 +27,7 @@ for zipf in 1.2 2.2; do
       rm -rf "$DATA" "$OUT"
       python3 tools/regen_testdata.py --seed 61 --sf 0.01 --out "$DATA" \
         --zipf "$zipf" --hub-mult "$hub" --value-scale "$vs" >/dev/null
-      tools/run_main.sh graft.VerifySome "$DATA" "$OUT" "$QS" \
+      tools/run_main.sh graft.Verify "$DATA" "$OUT" "$QS" \
         2>/dev/null | grep -E "\[verify\].*failed" || true
       if python3 tools/check.py "$DATA" "$OUT" | tail -1 \
           | grep -q " 0 fail"; then
