@@ -2,6 +2,10 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
+import org.apache.hadoop.util.functional.RemoteIterators
+import scala.jdk.CollectionConverters._
+import scala.util.chaining._
 
 /** Canonical loaders for the driver testdata tables.
   *
@@ -16,9 +20,9 @@ import org.apache.spark.sql.functions._
   *    loses precision above 2^53); micros just re-types NTZ → session
   *    TZ. DuckDB truncates/reads to microseconds identically.
   *
-  * At 100 TB these stay lazy scans: nothing here forces an action, and
-  * column pruning / predicate pushdown flow through the `withColumn`s.
-  */
+  * Each load is a fresh lazy scan; building it reads driver-side
+  * metadata only: the file listing, and Spark's footer-inference job
+  * when the per-path schema cache (keyed on listing + SQL confs) misses. */
 object Tables {
   /** Session settings every graft SparkSession needs. */
   def configure(b: SparkSession.Builder): SparkSession.Builder = b
@@ -127,8 +131,35 @@ object Tables {
     }
   }
 
+  /** Sorted recursive (path, len, mtime) leaf listing; "" if absent. */
+  private[graft] def listingFingerprint(spark: SparkSession,
+      path: String): String = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    if (!fs.exists(p)) ""
+    else RemoteIterators.toList(fs.listFiles(p, true)).asScala
+      .map(s => s"${s.getPath}|${s.getLen}|${s.getModificationTime}")
+      .sorted.mkString("\n")
+  }
+
+  // path -> ((listing fingerprint, SQL confs), inferred schema)
+  private val schemas = new java.util.concurrent.ConcurrentHashMap[
+    String, ((String, Map[String, String]), StructType)]()
+  private[graft] def cachedSchemaPaths = schemas.keySet.asScala.toSet
+
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val raw = spark.read.parquet(s"$dir/$name.parquet")
+    val path = s"$dir/$name.parquet"
+    val key = (listingFingerprint(spark, path), spark.conf.getAll)
+    val raw = Option(schemas.get(path)).filter(_._1 == key) match {
+      case Some((_, schema)) => spark.read.schema(schema).parquet(path)
+      case None => spark.read.parquet(path)
+        .tap(df => schemas.put(path, (key, df.schema)))
+    }
+    normalize(name, raw)
+  }
+
+  /** The per-table normalizations above, over a raw parquet read. */
+  private[graft] def normalize(name: String, raw: DataFrame): DataFrame =
     name match {
       case "events" =>
         raw.schema("ts").dataType match {
@@ -143,7 +174,6 @@ object Tables {
         raw.withColumn("l_shipdate", col("l_shipdate").cast("timestamp"))
       case _ => raw
     }
-  }
 
   def region(s: SparkSession, d: String): DataFrame = load(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame = load(s, d, "nation")

@@ -75,7 +75,8 @@ object BpeTrain {
     * the winning pair at consecutive positions form runs; within a
     * run only EVEN offsets merge. With contiguous positions the
     * offset of an occ row at p is p − (last non-occ position before
-    * p) − 1 — identical to the old pos − row_number gap grouping. */
+    * p) − 1 — identical to the old pos − row_number gap grouping.
+    * Precondition: positions are contiguous and 1-based per doc. */
   def learnMerges(tokens: DataFrame, rounds: Int)
       : (Seq[Merge], DataFrame) = {
     require(rounds >= 0, s"rounds must be >= 0: $rounds")

@@ -376,12 +376,12 @@ object PageRank {
     // decimal(38,0) sum; div returns long back in [0, 1e6]. The max
     // of rescaled inputs is ≤ 1e6·|V|, in long range for any real
     // |V| (longValueExact throws loudly far before the decimal
-    // overflow witness would).
+    // overflow witness would). Max 0 (empty frame): no `div 0`.
     def rescale(raw: DataFrame, stage: String): DataFrame = {
       val (r, ns) = Ckpt.cutCounted(raw, max(col("v")))
       trace += (s"${stage}r" -> r)
-      val out = r.select(col("id"),
-        expr(s"(v * 1000000L) div ${ns.head}L").as("v"))
+      val out = r.select(col("id"), (if (ns.head == 0L) col("v")
+        else expr(s"(v * 1000000L) div ${ns.head}L")).cast("long").as("v"))
       trace += (stage -> out)
       out
     }

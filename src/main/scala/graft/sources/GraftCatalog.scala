@@ -309,15 +309,9 @@ class GraftMemTable(tableName: String, tableSchema: StructType,
   private[sources] def loadRows(rs: Array[InternalRow]): Unit =
     synchronized { rows = rs; diskFp = computeDiskFp() }
 
-  private def computeDiskFp(): String = persistDir.map { dir =>
-    val spark = org.apache.spark.sql.SparkSession.active
-    val data = new org.apache.hadoop.fs.Path(dir, "data")
-    val fs = data.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(data)) ""
-    else fs.listStatus(data)
-      .map(s => s"${s.getPath.getName}|${s.getLen}|${s.getModificationTime}")
-      .sorted.mkString("\n")
-  }.getOrElse("")
+  private def computeDiskFp(): String = persistDir.fold("")(dir =>
+    graft.Tables.listingFingerprint(
+      org.apache.spark.sql.SparkSession.active, s"$dir/data"))
 
   private[sources] def isStaleOnDisk: Boolean =
     persistDir.isDefined && diskFp != computeDiskFp()

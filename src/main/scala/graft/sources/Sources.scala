@@ -44,11 +44,6 @@ object Sources {
     spark.read.schema(schema).option("header", "true")
       .option("mode", "PERMISSIVE").csv(path)
 
-  /** Parquet reader (schema enforced by the footer; `schema` narrows
-    * the read to the declared projection for early pruning). */
-  def parquetFiles(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
-
   /** S2: shape validation — fail fast when a required top-level
     * column is null/absent across the batch (the reference throws on
     * a missing `entity` array, task.ts:174-179). */

@@ -37,6 +37,22 @@ class EmptyInputSpec extends SparkSpec {
       .count() == 0L)
   }
 
+  test("integer HITS on an empty edge list: empty hubs and auths, no div 0, ANSI on and off") {
+    val edges = Seq.empty[(Long, Long)].toDF("src", "dst")
+    for (ansi <- Seq("true", "false"))
+      withConf("spark.sql.ansi.enabled", ansi) {
+        val (hubs, auths) = PageRank.integerHits(edges, "src", "dst",
+          iters = 2)
+        for (f <- Seq(hubs, auths)) {
+          assert(f.count() == 0L, s"ansi=$ansi")
+          assert(f.schema("v").dataType ==
+            org.apache.spark.sql.types.LongType)
+          assert(!f.queryExecution.analyzed.toString.contains(" div "),
+            s"ansi=$ansi: ${f.queryExecution.analyzed}")
+        }
+      }
+  }
+
   test("connected components with nodes but no edges: every node its own component") {
     val nodes = Seq(1L, 2L, 3L).toDF("id")
     val edges = Seq.empty[(Long, Long)].toDF("a", "b")

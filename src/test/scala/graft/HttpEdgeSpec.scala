@@ -3,10 +3,7 @@ package graft
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets.UTF_8
 
-import scala.jdk.CollectionConverters._
-
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.execution.LocalTableScanExec
 
 import graft.operators.Metlink
@@ -64,32 +61,6 @@ class HttpEdgeSpec extends SparkSpec {
     try f(s"http://127.0.0.1:$port/feed",
       s"http://127.0.0.1:$port/submit", () => (posted, apiKeySeen))
     finally server.stop(0)
-  }
-
-  /** Runs `f` under job group `group` and returns its result with the
-    * ids of the jobs it started: a marker job run after `f` flushes
-    * the listener queue, which delivers job starts in order. */
-  private def withJobs[T](group: String)(f: => T): (T, Seq[Int]) = {
-    val sc = spark.sparkContext
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, Int)]
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        seen.add((Option(e.properties)
-          .map(_.getProperty("spark.jobGroup.id")).orNull, e.jobId))
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, group)
-      val out = try f finally sc.clearJobGroup()
-      val marker = s"$group-marker"
-      sc.setJobGroup(marker, marker)
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      val deadline = System.nanoTime() + 10000000000L
-      while (!seen.asScala.exists(_._1 == marker) &&
-          System.nanoTime() < deadline) Thread.sleep(10)
-      assert(seen.asScala.exists(_._1 == marker), "marker job not seen")
-      (out, seen.asScala.collect { case (`group`, id) => id }.toSeq)
-    } finally sc.removeSparkListener(listener)
   }
 
   test("fetch → pipeline → submit round-trip with api key header") {
