@@ -1,10 +1,12 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+
+import graft.plans.PreparedProjection
 
 /** Reference-parity pipeline (SURVEY.md §2.A): the complete
   * behavior of the reference's `task.ts` vehicle-position transform,
@@ -14,11 +16,10 @@ import org.apache.spark.sql.types._
   * The reference processes one JSON snapshot in a single fused loop
   * (task.ts:194-321); here each step is a declarative Column and
   * Catalyst re-fuses them. The per-entity rules live once, in the
-  * [[keep]] predicate and the [[feature]] struct; two forms apply
-  * them. [[pipeline]] takes snapshot documents and dedups inside each
-  * one, with no shuffle, as the reference's per-invocation Map does;
-  * [[transform]] takes entity rows and dedups across the whole frame
-  * with a window partitioned by cotId, its only shuffle.
+  * [[keep]] predicate and the [[feature]] struct. [[pipeline]] (and,
+  * for one HTTP body, [[snapshot]]) dedups inside each document, as
+  * the reference's per-invocation Map does; [[transform]] dedups
+  * entity rows across the frame, with a window partitioned by cotId.
   */
 object Metlink {
 
@@ -67,11 +68,11 @@ object Metlink {
     "34ae1613-9645-4222-a9d2-e5f243dea2865/Transportation/Ship.png"
   val StaleMs = 180000L
 
-  /** P1 (task.ts:213): route id = trip_id before the first "__".
-    * JS split is literal; "__" has no regex metachars so Spark's
-    * regex split is byte-identical. */
+  /** P1 (task.ts:213): route id = trip_id before the first "__" (JS
+    * `split('__')[0]`: the whole id when it has none). A literal
+    * search, where Spark's `split` compiles a regex on every call. */
   def correctRouteId(tripId: Column): Column =
-    split(tripId, "__").getItem(0)
+    substring_index(tripId, "__", 1)
 
   /** P2 (task.ts:225-242): trip prefix / route → vehicle class
     * struct {vehicleType, icon, cotType, markerColor}. */
@@ -265,22 +266,14 @@ object Metlink {
       .limit(1).collect().headOption
       .map(_.getString(0).take(maxChars) + "...")
 
-  /** The document form: one row per GTFS-RT snapshot (the feed
-    * envelope), one GeoJSON-feature row per surviving cotId out. A1
-    * last-wins dedup (task.ts:191,312) runs inside each document's
-    * `entity` array, as the reference's per-invocation `features` Map
-    * does: each cotId keeps its first-seen position and its last-seen
-    * value (JS `Map.set` semantics), and two documents in one frame
-    * (two files of a stream micro-batch) never dedup against each
-    * other. Rows come out in document order, then first-seen order.
-    *
-    * No window and no shuffle: every step is a per-row array
-    * expression, so on a one-document local frame (the HTTP edge's
-    * [[graft.sources.Sources.jsonDocument]]) the whole plan up to the
-    * explode folds on the driver. The dedup costs one key scan per
-    * distinct cotId, O(n·d) in a document of n entities with d
-    * distinct cotIds — documents are snapshot-sized (O(1000)). */
-  def pipeline(feed: DataFrame, cfg: Config = Config()): DataFrame = {
+  /** The per-document stages of [[pipeline]] and [[snapshot]] over an
+    * `entity` array: the kept entities' Features; their sorted (dedup
+    * key, position) pairs; the `features` deduped by A1 (task.ts:191,
+    * 312) in O(n log n): a cotId keeps the first-seen position and the
+    * last-seen value (JS `Map.set`) of its run of pairs; null cotIds
+    * share a key. Each array is a select used twice by the next, which
+    * CollapseProject keeps apart, or a lambda would rebuild it per element. */
+  private[graft] def stages(cfg: Config): Seq[DataFrame => DataFrame] = {
     val classified = functions.transform(col("entity"), e => struct(
       e.getField("id").as("id"), e.getField("vehicle").as("vehicle"),
       classifyVehicle(e.getField("vehicle").getField("trip")
@@ -288,26 +281,48 @@ object Metlink {
     val feats = functions.transform(
       filter(classified, e => keep(e("vehicle"), e("cls"), cfg)),
       e => feature(e("id"), e("vehicle"), e("cls")))
-    // Dedup keys, reversed so that array_position finds a key's LAST
-    // occurrence. A null cotId gets key "-" (every other key starts
-    // with "+"), so null ids share one key, as in transform's window.
-    val rkeys = reverse(functions.transform(col("__feats"),
-      f => coalesce(concat(lit("+"), f("id")), lit("-"))))
-    // A1 (task.ts:191,312): distinct keys in first-seen order, each
-    // mapped to the feature at its last occurrence
-    val lastWins = functions.transform(
-      array_distinct(reverse(col("__rkeys"))),
-      k => element_at(col("__feats"),
-        -array_position(col("__rkeys"), k).cast("int")))
-    // One select per array, each referenced twice below, so that
-    // CollapseProject keeps them apart and each is built once rather
-    // than re-derived inside the next lambda.
-    feed
-      .select(feats.as("__feats"))
-      .select(col("__feats"), rkeys.as("__rkeys"))
-      .select(explode(lastWins).as("__f"))
-      .select(col("__f.*"))
+    // a null cotId gets key "-"; every other key starts with "+"
+    val keyed = sort_array(functions.transform(col("__feats"), (f, i) => struct(
+      coalesce(concat(lit("+"), f("id")), lit("-")).as("k"), i.as("i"))))
+    val s = col("__keyed")
+    val heads = filter(s, (p, j) => j === 0 || element_at(s, j)("k") =!= p("k"))
+    val tails = filter(s, (p, j) =>
+      j === size(s) - 1 || element_at(s, j + 2)("k") =!= p("k"))
+    val spans = sort_array(zip_with(heads, tails,
+      (h, t) => struct(h("i").as("first"), t("i").as("last"))))
+    Seq(_.select(feats.as("__feats")),
+      _.select(col("__feats"), keyed.as("__keyed")),
+      _.select(functions.transform(spans,
+        p => element_at(col("__feats"), p("last") + 1)).as("features")))
   }
+
+  /** The document form: one row per GTFS-RT snapshot (the feed
+    * envelope) in, one GeoJSON-feature row per surviving cotId out, in
+    * document then first-seen order: [[stages]], exploded, so documents
+    * never dedup against each other. No window, no shuffle: on one
+    * local document the plan up to the explode folds on the driver. */
+  def pipeline(feed: DataFrame, cfg: Config = Config()): DataFrame =
+    Function.chain(stages(cfg))(feed)
+      .select(explode(col("features")).as("__f")).select(col("__f.*"))
+
+  /** `featureCollection(pipeline(Sources.jsonDocument(spark, body,
+    * vehicleSchema), cfg))` byte for byte, with no Dataset and no job: a
+    * [[PreparedProjection]] planned once per (`cfg`, session SQL confs),
+    * so a conf change (say, `time`'s zone) plans anew; one per Config. */
+  def snapshot(spark: SparkSession, body: String,
+      cfg: Config = Config()): String =
+    prepared.compute(cfg, (_, old) =>
+      if (old != null && old.confs == spark.conf.getAll) old
+      else new PreparedProjection(spark, v => Function.chain(stages(cfg))(
+        v.select(from_json(col("value"), vehicleSchema)("entity").as("entity")))
+        .select(wrap(coalesce(col("features"), array()))))
+    )(spark, body).getUTF8String(0).toString
+
+  private[graft] val prepared =
+    new java.util.concurrent.ConcurrentHashMap[Config, PreparedProjection]()
+
+  private def wrap(fs: Column): Column =
+    to_json(struct(lit("FeatureCollection").as("type"), fs.as("features")))
 
   /** K1 (task.ts:324-341): wrap all features into one
     * FeatureCollection JSON document — the reference's exact wire
@@ -325,8 +340,7 @@ object Metlink {
     features
       .agg(collect_list(struct(col("id"), col("type"),
         col("properties"), col("geometry"))).as("features"))
-      .select(to_json(struct(lit("FeatureCollection").as("type"),
-        col("features"))).as("fc"))
+      .select(wrap(col("features")).as("fc"))
 
   /** K1 at scale: the SAME features as [[featureCollection]], written
     * as partitioned newline-delimited GeoJSON — one Feature document

@@ -4,6 +4,8 @@ import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.time.Duration
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.SparkSession
 
 import graft.operators.Metlink
@@ -12,12 +14,10 @@ import graft.operators.Metlink
   * boundaries made real: GET the GTFS-RT snapshot with an `x-api-key`
   * header (task.ts:150-167) and POST the resulting FeatureCollection
   * to the sink endpoint (task.ts:341). Both calls stay DRIVER-side,
-  * exactly like the reference's Lambda; the Spark work happens
-  * between them, behind the [[Sources.jsonDocument]] /
-  * [[Metlink.featureCollection]] boundary. For one fetched snapshot
-  * that work plans to a driver-side LocalRelation and launches no
-  * job (see [[Metlink.pipeline]]). JDK `java.net.http` only — no
-  * added dependencies.
+  * exactly like the reference's Lambda; between them,
+  * [[Metlink.snapshot]] evaluates a projection prepared once per
+  * (Config, session SQL confs): no Dataset, no job. JDK
+  * `java.net.http` only — no added dependencies.
   */
 object HttpEdge {
 
@@ -58,11 +58,10 @@ object HttpEdge {
   }
 
   /** The reference's whole `control()` run (task.ts:147-342) against
-    * live endpoints: fetch → parse under the declared schema → shape
-    * check → transform pipeline → wrap → submit. Any failure before
-    * the submit posts an EMPTY FeatureCollection instead
-    * (task.ts:180-188) so downstream markers go stale rather than
-    * freezing on an error.
+    * live endpoints: fetch → parse, transform and wrap
+    * ([[Metlink.snapshot]]) → submit. Any non-fatal failure before the
+    * submit posts an EMPTY FeatureCollection instead (task.ts:180-188)
+    * so downstream markers go stale rather than freezing on an error.
     *
     * @return the FeatureCollection JSON that was submitted
     */
@@ -70,16 +69,10 @@ object HttpEdge {
       submitUrl: String,
       cfg: Metlink.Config = Metlink.Config()): String = {
     val fc: String =
-      try {
-        val body = fetchJson(fetchUrl, Map("x-api-key" -> apiKey))
-        val feed = Sources.jsonDocument(spark, body, Metlink.vehicleSchema)
-        val parsed = Sources.requireShape(feed, "entity")
-        val features = Metlink.pipeline(parsed, cfg)
-        Metlink.featureCollection(features)
-          .collect().headOption.map(_.getString(0))
-          .getOrElse(EmptyFeatureCollection)
-      } catch {
-        case e: Throwable =>
+      try Metlink.snapshot(spark,
+        fetchJson(fetchUrl, Map("x-api-key" -> apiKey)), cfg)
+      catch {
+        case NonFatal(e) =>
           System.err.println("[graft] metlink fetch/transform failed, " +
             s"submitting empty FeatureCollection: ${e.getMessage}")
           EmptyFeatureCollection

@@ -1,5 +1,7 @@
 package graft.sources
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
@@ -65,9 +67,9 @@ object Sources {
   }
 
   /** S3: error → empty-output fallback (task.ts:180-188): run the
-    * pipeline; on ANY failure return an empty frame with the right
-    * schema so downstream sinks receive a valid (empty) batch
-    * instead of crashing — markers go stale rather than freezing. */
+    * pipeline; on any non-fatal failure return an empty frame with
+    * the right schema so downstream sinks receive a valid (empty)
+    * batch instead of crashing — markers go stale, not frozen. */
   def withEmptyFallback(spark: SparkSession, outputSchema: StructType)(
       pipeline: => DataFrame): DataFrame =
     try {
@@ -75,7 +77,7 @@ object Sources {
       out.queryExecution.assertAnalyzed()
       out
     } catch {
-      case e: Throwable =>
+      case NonFatal(e) =>
         // the reference logs and submits an empty FeatureCollection
         System.err.println(s"[graft] pipeline failed, emitting " +
           s"empty output: ${e.getMessage}")
