@@ -87,6 +87,8 @@ object BpeTrain {
       .withColumn("tok_b", lead(col("tok"), 1).over(w))
       .transform(Ckpt.cut)
     val merges = scala.collection.mutable.ArrayBuffer.empty[Merge]
+    // hand-rolled, not Ckpt.iterate: each round's stop test is the
+    // driver collect that also picks the round's merge
     var r = 0
     var exhausted = false
     while (r < rounds && !exhausted) {

@@ -30,7 +30,8 @@ import org.apache.spark.sql.{Column, DataFrame}
   *
   * The two modes are output-identical (both evaluate the same frame
   * eagerly; only the storage of the result differs) — `CkptSpec`
-  * pins hash-equality of a representative kernel across modes.
+  * pins output equality across modes on components, k-core, the
+  * three BFS entry points and `Curate.curate`.
   *
   * The Spark context's checkpoint dir is set lazily from the conf on
   * first use; a conf change after the first cut in a session keeps
@@ -50,6 +51,15 @@ import org.apache.spark.sql.{Column, DataFrame}
   * which for these kernels is one round later — the checkpoint dir
   * holds O(1) round frames instead of O(rounds). `ProbeCkptFault`
   * launches with this conf and asserts the dir does not accumulate.
+  *
+  * ONE PATH: every lineage cut in `src/main` goes through [[cut]] (or
+  * [[cutObserved]]/[[cutCounted]]/[[iterate]], which call it), so the
+  * reliable mode covers every materialization the engine makes;
+  * `CheckpointPathSpec` fails on a raw `localCheckpoint`/`checkpoint`
+  * call anywhere else. Loops whose state is one cut frame run on
+  * [[iterate]] — it owns the initial cut, the round cap, each round's
+  * cut with its observed metrics, and the stop test; a loop that
+  * stays hand-rolled says why in a comment.
   */
 object Ckpt {
   /** Runtime conf key: when set, iterative kernels use reliable
@@ -68,6 +78,64 @@ object Ckpt {
         df.checkpoint(eager = true)
       case None => df.localCheckpoint(eager = true)
     }
+  }
+
+  /** A fixpoint loop after `rounds` steps: the last cut frame, the
+    * metrics observed while cutting it, and whether the stop test
+    * fired (false while the loop runs and when it hit its cap). */
+  final case class Fixpoint(df: DataFrame, rounds: Int,
+      metrics: Seq[Any], converged: Boolean)
+
+  /** Stop test of [[iterate]], applied to every cut (the initial one
+    * included): the previous cut's metrics (None for the initial
+    * cut) and this cut's. Metric values compare numerically, with a
+    * null aggregate (zero rows) read as 0 and decimals compared by
+    * value, so signatures past int64 stay exact. */
+  trait Stop { self =>
+    def apply(prev: Option[Seq[Any]], cur: Seq[Any]): Boolean
+    def ||(other: Stop): Stop = (p, c) => self(p, c) || other(p, c)
+  }
+
+  object Stop {
+    /** Run every round up to the cap. */
+    val Never: Stop = (_, _) => false
+    /** The first metric is zero: a drained frontier or peel set.
+      * Holds on the initial cut too, so an empty start runs no step. */
+    val Zero: Stop = (_, cur) => num(cur.head).signum == 0
+    /** Every metric equals the previous cut's: a monotone kernel's
+      * signature stopped moving. Never holds on the initial cut. */
+    val Unchanged: Stop = (prev, cur) => prev.exists(
+      _.corresponds(cur)((a, b) => num(a).compareTo(num(b)) == 0))
+  }
+
+  private def num(v: Any): java.math.BigDecimal = v match {
+    case null => java.math.BigDecimal.ZERO
+    case d: java.math.BigDecimal => d
+    case n: java.lang.Number => new java.math.BigDecimal(n.toString)
+  }
+
+  /** The fixpoint loop every iterative kernel runs: cut `init`, then
+    * while fewer than `maxRounds` steps ran and `stop` has not held,
+    * cut `step(state)` as the next state. Each cut observes `metrics`
+    * during its own materialization job ([[cutObserved]]), so the
+    * convergence probe costs no extra driver action. The step reads
+    * the previous state (round number `rounds + 1`, its frame and
+    * metrics); a step that needs earlier frames keeps them itself.
+    * Neither logs nor throws on hitting the cap: callers read
+    * `converged` and warn, throw or report the rounds. */
+  def iterate(init: DataFrame, maxRounds: Int, metrics: Column*)(
+      stop: Stop)(step: Fixpoint => DataFrame): Fixpoint = {
+    def cutRound(df: DataFrame, rounds: Int,
+        prev: Option[Seq[Any]]): Fixpoint = {
+      val (c, got) =
+        if (metrics.isEmpty) (cut(df), Nil)
+        else cutObserved(df, metrics: _*)
+      Fixpoint(c, rounds, got, stop(prev, got))
+    }
+    var s = cutRound(init, 0, None)
+    while (s.rounds < maxRounds && !s.converged)
+      s = cutRound(step(s), s.rounds + 1, Some(s.metrics))
+    s
   }
 
   private val obsId = new java.util.concurrent.atomic.AtomicLong()

@@ -76,44 +76,27 @@ object Components {
     // Per-node labels only ever DECREASE, so the label sum strictly
     // decreases until fixpoint — an unchanged sum IS convergence.
     // The sum is OBSERVED during each round's checkpoint job
-    // (Ckpt.cutObserved, r16) instead of being a second aggregate
-    // action; decimal(38,0) so huge id spaces can't
-    // overflow-collide, null (zero rows) reads as zero.
-    val sumCol = sum(col("component").cast("decimal(38,0)"))
-    def asDec(v: Any): java.math.BigDecimal = v match {
-      case null => java.math.BigDecimal.ZERO
-      case d: java.math.BigDecimal => d
-    }
-    var (labels, prevSum) = {
-      val (c, vs) = Ckpt.cutObserved(
-        nodes.select(col(idCol).as("id")).distinct()
-          .withColumn("component", col("id")),
-        sumCol)
-      (c, asDec(vs.head))
-    }
-    var it = 0
-    var converged = false
-    while (it < maxIters && !converged) {
+    // (Ckpt.iterate) instead of being a second aggregate action;
+    // decimal(38,0) so huge id spaces can't overflow-collide.
+    val own = nodes.select(col(idCol).as("id")).distinct()
+      .withColumn("component", col("id"))
+    val fp = Ckpt.iterate(own, maxIters,
+        sum(col("component").cast("decimal(38,0)")))(
+        Ckpt.Stop.Unchanged) { s =>
+      val labels = s.df
       val viaNeighbor = sym.join(labels, sym("dst") === labels("id"))
         .select(col("src").as("id"), col("component"))
-      val (next, vs) = Ckpt.cutObserved(
-        labels.unionByName(viaNeighbor)
-          .groupBy(col("id"))
-          .agg(min(col("component")).as("component")),
-        sumCol)
-      val nextSum = asDec(vs.head)
-      converged = nextSum.compareTo(prevSum) == 0
-      prevSum = nextSum
-      labels = next
-      it += 1
+      labels.unionByName(viaNeighbor)
+        .groupBy(col("id"))
+        .agg(min(col("component")).as("component"))
     }
-    if (!converged)
+    if (!fp.converged)
       throw new IllegalStateException(
         s"connectedComponents did not converge within $maxIters rounds " +
           "— the graph's diameter exceeds the bound; raise maxIters " +
           "(or switch to connectedComponentsStar, O(log²) rounds on " +
           "adversarially deep graphs)")
-    labels
+    fp.df
   }
 
   /** Alternating large-star/small-star connected components (Kiveris
@@ -159,17 +142,8 @@ object Components {
     // (count, Σ endpoints) as the fixpoint signature: both phases
     // only move endpoints DOWN, so an unchanged (count, sum) pair
     // means no edge moved — deterministic, observed during each
-    // round's checkpoint job (Ckpt.cutObserved, r16), no extra
-    // action, no join.
-    val sigCols = Seq(count(lit(1)),
-      sum(col("u").cast("decimal(38,0)") +
-        col("v").cast("decimal(38,0)")))
-    def asSig(vs: Seq[Any]): (Long, java.math.BigDecimal) =
-      (vs.head.asInstanceOf[Long],
-        vs(1) match {
-          case null => java.math.BigDecimal.ZERO
-          case d: java.math.BigDecimal => d
-        })
+    // round's checkpoint job (Ckpt.iterate), no extra action, no
+    // join. A zero count is the edge-free graph: already done.
     // large-star: symmetrize so every node sees its full
     // neighborhood; m(u) = min over N(u) ∪ {u}; emit (v, m(u)) for
     // v > u. Self-loops (v == m) drop; duplicates collapse in the
@@ -199,27 +173,16 @@ object Components {
         .filter(col("u") =!= col("v"))
         .distinct()
     }
-    var (cur, prevSig) = {
-      val (c, vs) = Ckpt.cutObserved(
-        edges
-          .select(col(aCol).as("u"), col(bCol).as("v"))
-          .filter(col("u") =!= col("v"))
-          .distinct(),
-        sigCols: _*)
-      (c, asSig(vs))
-    }
-    var it = 0
-    var converged = prevSig._1 == 0L // edge-free graph: already done
-    while (it < maxIters && !converged) {
-      val (c, vs) = Ckpt.cutObserved(
-        smallStar(largeStar(cur)), sigCols: _*)
-      cur = c
-      val s = asSig(vs)
-      converged = s == prevSig
-      prevSig = s
-      it += 1
-    }
-    if (!converged)
+    val pairs = edges
+      .select(col(aCol).as("u"), col(bCol).as("v"))
+      .filter(col("u") =!= col("v"))
+      .distinct()
+    val fp = Ckpt.iterate(pairs, maxIters, count(lit(1)),
+        sum(col("u").cast("decimal(38,0)") +
+          col("v").cast("decimal(38,0)")))(
+        Ckpt.Stop.Zero || Ckpt.Stop.Unchanged)(
+        s => smallStar(largeStar(s.df)))
+    if (!fp.converged)
       throw new IllegalStateException(
         s"connectedComponentsStar did not converge within $maxIters " +
           "full rounds — raise maxIters (bound is O(log² n), so this " +
@@ -230,7 +193,7 @@ object Components {
     // each u has exactly one root, so the groupBy is a cheap
     // near-no-op exchange.
     nodes.select(col(idCol).as("id")).distinct()
-      .join(cur.select(col("u").as("id"), col("v").as("root")),
+      .join(fp.df.select(col("u").as("id"), col("v").as("root")),
         Seq("id"), "left")
       .groupBy(col("id"))
       .agg(min(coalesce(col("root"), col("id"))).as("component"))

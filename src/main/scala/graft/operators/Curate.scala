@@ -80,12 +80,12 @@ object Curate {
     // The frame feeds THREE consumers (band keys, shingle join-back,
     // final anti-join); a lazy .persist() lets parallel stages of the
     // single downstream action race to populate the cache and
-    // re-evaluate the scan+window per consumer. Eager localCheckpoint
+    // re-evaluate the scan+window per consumer. An eager cut
     // materializes it exactly once, truncates the lineage (the
     // downstream plan reads blocks, never the scan), and is reclaimed
     // by the ContextCleaner when unreferenced — no unpersist
-    // obligation on the caller. At cluster scale prefer a reliable
-    // checkpoint dir (localCheckpoint blocks are executor-local and
+    // obligation on the caller. At cluster scale set a reliable
+    // checkpoint dir (Ckpt: local cut blocks are executor-local and
     // non-replicated, so an executor loss kills the job).
     val exact = cleaned
       .withColumn("__h", md5(col("clean")))
@@ -93,7 +93,7 @@ object Curate {
         org.apache.spark.sql.expressions.Window.partitionBy(col("__h"))))
       .filter(col("id") === col("__keep"))
       .drop("__h", "__keep")
-      .localCheckpoint(true)
+      .transform(Ckpt.cut)
     val pairs = Dedup.lshNearDupPairs(exact, "id", "clean",
       n = n, k = k, bands = bands, minJaccard = minJaccard)
     def components() =

@@ -260,7 +260,7 @@ object Dedup {
     val spans = crossDocDupSpansOwned(docs, idCol, textCol, n)
       .filter(col("doc") =!= col("m_first"))
       .select(col("doc"), col("m_start"), col("m_end"))
-      .localCheckpoint(true)
+      .transform(Ckpt.cut)
     val toks = docs
       .select(col(idCol).as("doc"),
         posexplode(TextOps.tokens(col(textCol))))
@@ -360,7 +360,7 @@ object Dedup {
         // needs sorted arrays, and array_intersect is order-blind
         array_sort(shingleSet(col(textCol), n)).as("sh"))
       .filter(size(col("sh")) > 0)
-      .localCheckpoint(true)
+      .transform(Ckpt.cut)
     val candidates = prefixFilterCandidates(sh, tauPpm)
     // 4-range partition bound on the intersection (suffix filter).
     // Pivots are B\'s quartile VALUES; B-side range sizes are exact
@@ -474,7 +474,7 @@ object Dedup {
             expr(s"(CAST(size(toks) AS BIGINT) * $tauPpm + 999999) " +
               "div 1000000") + lit(1L)).cast("int")))
           .as(Seq("pos", "g")))
-      .localCheckpoint(true)
+      .transform(Ckpt.cut)
     // index prefix length |y| - ceil(2tau/(1+tau)*|y|) + 1, from n_sh
     val index = probe.filter(col("pos") <
       col("n_sh") -

@@ -57,7 +57,7 @@ object EntityRes {
     val base = records.select(col(idCol).as("id"),
         col(strCol).as("s"))
       .filter(col("s").isNotNull)
-      .localCheckpoint(true)
+      .transform(Ckpt.cut)
     // keys = s plus delete-at-i for i in 0..|s|-1 (1-based substr:
     // first i chars ++ chars from i+2 on)
     val keyed = base.select(col("id"), explode(concat(
@@ -109,7 +109,7 @@ object EntityRes {
     val base = records.select(col(idCol).as("id"),
         col(strCol).as("s"))
       .filter(col("s").isNotNull)
-      .localCheckpoint(true)
+      .transform(Ckpt.cut)
     val cand = editDistance2Candidates(base)
     cand
       .join(base.select(col("id").as("a"), col("s").as("sa")), Seq("a"))
@@ -198,7 +198,7 @@ object EntityRes {
       .select(col("id"), col("key"),
         (col("off") + col("lrk")).as("rk"))
       .withColumn("bkt", expr(s"(rk - 1) DIV $w"))
-      .localCheckpoint(true)
+      .transform(Ckpt.cut)
     val left = ranked.select(col("bkt"), col("rk").as("rka"),
       col("id").as("a"), col("key").as("key_a"))
     val right0 = ranked.select(col("bkt"), col("rk").as("rkb"),

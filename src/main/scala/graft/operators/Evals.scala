@@ -85,14 +85,16 @@ object Evals {
     require(iters >= 1, s"iters must be >= 1, got $iters")
     val o = oriented
       .select(col("item"), col("opp"), col("n"), col("w"))
-      .localCheckpoint(true)
-    val items = o.select(col("item")).distinct().localCheckpoint(true)
+      .transform(Ckpt.cut)
+    val items = o.select(col("item")).distinct().transform(Ckpt.cut)
     val nItems = items.count()
     require(nItems >= 2, s"need >= 2 items, got $nItems")
     val wins = o.groupBy(col("item"))
       .agg(sum(col("w")).as("wins"), sum(col("n")).as("n_cmp"))
-      .localCheckpoint(true)
+      .transform(Ckpt.cut)
     val scaleMicro = nItems * 1000000L
+    // hand-rolled, not Ckpt.iterate: a round is two cuts (raw, then
+    // its normalization)
     var s = items.select(col("item"), lit(1000000L).as("v"))
     for (_ <- 1 to iters) {
       val denom = o
@@ -111,13 +113,13 @@ object Evals {
         .select(col("item"),
           expr("(cast(wins as decimal(38,0)) * 1000000000000000)" +
             " div denom").as("raw"))
-        .localCheckpoint(true)
+        .transform(Ckpt.cut)
       s = raw
         .crossJoin(broadcast(raw.agg(sum(wide(col("raw"))).as("tot"))))
         .select(col("item"),
           expr(s"(cast(raw as decimal(38,0)) * $scaleMicro) div tot")
             .as("v"))
-        .localCheckpoint(true)
+        .transform(Ckpt.cut)
     }
     s.join(broadcast(wins), Seq("item"))
       .select(col("item"), col("n_cmp"), col("wins"),
@@ -378,12 +380,11 @@ object Evals {
     val ord = Window.orderBy(col("lo"))
     val run = Window.orderBy(col("lo"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    var blocks = bins
+    val start = bins
       .select(col("bin").as("lo"), col("bin").as("hi"), col("n"),
         col("pos"))
-      .localCheckpoint(true)
-    for (_ <- 1 to passes) {
-      blocks = blocks
+    val blocks = Ckpt.iterate(start, passes)(Ckpt.Stop.Never) { s =>
+      s.df
         .withColumn("prev_pos", lag(col("pos"), 1).over(ord))
         .withColumn("prev_n", lag(col("n"), 1).over(ord))
         .withColumn("grp", sum(when(col("prev_pos").isNull ||
@@ -394,8 +395,7 @@ object Evals {
         .agg(min(col("lo")).as("lo"), max(col("hi")).as("hi"),
           sum(col("n")).as("n"), sum(col("pos")).as("pos"))
         .select(col("lo"), col("hi"), col("n"), col("pos"))
-        .localCheckpoint(true)
-    }
+    }.df
     blocks
       .select(col("lo").as("lo_bin"), col("hi").as("hi_bin"),
         col("n"), col("pos"),
@@ -428,7 +428,7 @@ object Evals {
     require(k >= 2, s"need >= 2 raters, got $k")
     val named = items.select(
       labelCols.zipWithIndex.map { case (c, i) => c.as(s"l$i") }: _*)
-      .localCheckpoint(true)
+      .transform(Ckpt.cut)
     val eqPairs = (0 until k).combinations(2).map { case Seq(i, j) =>
       when(col(s"l$i") === col(s"l$j"), 1L).otherwise(0L)
     }.reduce(_ + _)
@@ -516,7 +516,7 @@ object Evals {
       yCol: Column): DataFrame = {
     val g = scored.select(xCol.as("x"), yCol.as("y"))
       .groupBy(col("x"), col("y")).agg(count(lit(1)).as("n"))
-      .localCheckpoint(true)
+      .transform(Ckpt.cut)
     val dense = g.select(col("x")).distinct()
       .crossJoin(g.select(col("y")).distinct())
       .join(g, Seq("x", "y"), "left_outer")
@@ -635,7 +635,7 @@ object Evals {
     val cont = labeled.select(aCol.as("a1"), bCol.as("a2"))
       .groupBy(col("a1"), col("a2"))
       .agg(count(lit(1)).as("k"))
-      .localCheckpoint(true)
+      .transform(Ckpt.cut)
     val rows = cont.groupBy(col("a1").as("label"))
       .agg(sum(col("k")).as("row_n"))
     val cols = cont.groupBy(col("a2").as("label"))
@@ -648,7 +648,7 @@ object Evals {
         coalesce(col("row_n"), lit(0L)).as("row_n"),
         coalesce(col("col_n"), lit(0L)).as("col_n"),
         coalesce(col("diag_n"), lit(0L)).as("diag_n"))
-      .localCheckpoint(true)
+      .transform(Ckpt.cut)
     val tot = m.agg(
       sum(col("row_n")).cast("decimal(38,0)").as("n"),
       sum(col("diag_n")).cast("decimal(38,0)").as("agree"),

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import Ckpt.Stop
+
 /** Co-occurrence graph construction: items sharing a group (parts
   * sharing an order, terms sharing a document) become edges.
   *
@@ -119,33 +121,20 @@ object Graph {
       .distinct()
       .transform(Ckpt.cut)
     // the (count, Σd) convergence signature is OBSERVED during each
-    // round's checkpoint job (Ckpt.cutCounted, r16) instead of being
-    // a separate aggregate action — the relaxation loop is
+    // round's checkpoint job (Ckpt.iterate) instead of being a
+    // separate aggregate action — the relaxation loop is
     // driver-round bound at bench scale, so one action per round
-    val sigCols = Seq(count(col("id")), sum(col("d")))
-    var (dist, sig) = {
-      val (c, ns) = Ckpt.cutCounted(
-        sources.select(col(srcCol).as("id")).distinct()
-          .withColumn("d", lit(0L)),
-        sigCols: _*)
-      (c, ns)
-    }
-    var round = 0
-    var converged = false
-    while (round < maxEdges && !converged) {
-      round += 1
+    val start = sources.select(col(srcCol).as("id")).distinct()
+      .withColumn("d", lit(0L))
+    val fp = Ckpt.iterate(start, maxEdges, count(col("id")),
+        sum(col("d")))(Stop.Unchanged) { s =>
       val relaxed = sym
-        .join(dist.select(col("id").as("src"), col("d")), Seq("src"))
+        .join(s.df.select(col("id").as("src"), col("d")), Seq("src"))
         .select(col("dst").as("id"), (col("d") + col("w")).as("d"))
-      val (d2, next) = Ckpt.cutCounted(
-        dist.unionByName(relaxed)
-          .groupBy(col("id")).agg(min(col("d")).as("d")),
-        sigCols: _*)
-      dist = d2
-      converged = next == sig
-      sig = next
+      s.df.unionByName(relaxed)
+        .groupBy(col("id")).agg(min(col("d")).as("d"))
     }
-    (dist, round)
+    (fp.df, fp.rounds)
   }
 
   /** k-core decomposition (peel to fixpoint): the maximal subgraph in
@@ -197,47 +186,33 @@ object Graph {
       .transform(Ckpt.cut)
     // symmetric + distinct ⇒ out-degree == undirected degree.
     // The under-k frontier COUNT is observed during each round's
-    // checkpoint (Ckpt.cutCounted, r16), so the peel's emptiness
-    // probe costs no extra driver action.
-    val underK = count(when(col("deg") < k, lit(1)))
-    var (degs, nDrop) = {
-      val (c, ns) = Ckpt.cutCounted(
-        sym.groupBy(col("src").as("id"))
-          .agg(count(lit(1)).as("deg")),
-        underK)
-      (c, ns.head)
-    }
-    var round = 0
-    var done = false
-    while (round < maxRounds && !done) {
-      round += 1
+    // checkpoint (Ckpt.iterate), so the peel's emptiness probe costs
+    // no extra driver action.
+    val degs = sym.groupBy(col("src").as("id"))
+      .agg(count(lit(1)).as("deg"))
+    val fp = Ckpt.iterate(degs, maxRounds,
+        count(when(col("deg") < k, lit(1))))(Stop.Zero) { s =>
       // a lazy filter over the CHECKPOINTED degree table: cheap to
       // evaluate twice (dec build side + survivor filter), so no
-      // materialization job per round for the frontier itself
-      val dropped = degs.filter(col("deg") < k).select(col("id"))
-      if (nDrop == 0) done = true
-      else {
-        // edges INTO the frontier, counted per surviving source;
-        // sources already dropped in earlier rounds simply miss in
-        // the degree-table join below
-        val dec = sym
-          .join(dropped.select(col("id").as("dst")), Seq("dst"))
-          .groupBy(col("src").as("id"))
-          .agg(count(lit(1)).as("dec"))
-        // survivors = deg >= k (same set as anti-joining `dropped`,
-        // one vertex-sized join cheaper per round)
-        val (d2, ns) = Ckpt.cutCounted(
-          degs
-            .filter(col("deg") >= k)
-            .join(dec, Seq("id"), "left")
-            .select(col("id"),
-              (col("deg") - coalesce(col("dec"), lit(0L))).as("deg")),
-          underK)
-        degs = d2
-        nDrop = ns.head
-      }
+      // materialization job per round for the frontier itself.
+      // Edges INTO the frontier, counted per surviving source;
+      // sources already dropped in earlier rounds simply miss in
+      // the degree-table join below
+      val dec = sym
+        .join(s.df.filter(col("deg") < k).select(col("id").as("dst")),
+          Seq("dst"))
+        .groupBy(col("src").as("id"))
+        .agg(count(lit(1)).as("dec"))
+      // survivors = deg >= k (same set as anti-joining the frontier,
+      // one vertex-sized join cheaper per round)
+      s.df
+        .filter(col("deg") >= k)
+        .join(dec, Seq("id"), "left")
+        .select(col("id"),
+          (col("deg") - coalesce(col("dec"), lit(0L))).as("deg"))
     }
-    (degs, round)
+    // a peel round is counted when it finds the frontier empty too
+    (fp.df, math.min(fp.rounds + (if (fp.converged) 1 else 0), maxRounds))
   }
 
   /** Full core-number decomposition (graph degeneracy, capped at
@@ -289,58 +264,40 @@ object Graph {
     // early leaves upper-bound estimates, same contract as a
     // truncated peel).
     // the Σc convergence signature is observed during each round's
-    // checkpoint job (Ckpt.cutCounted, r16) — no separate aggregate
-    // action per round
-    var (state, last) = {
-      val (c, ns) = Ckpt.cutCounted(
-        sym.groupBy(col("src").as("id"))
-          .agg(least(count(lit(1)), lit(maxK.toLong)).cast("int")
-            .as("c")),
-        sum(col("c")))
-      (c, ns.head)
+    // checkpoint job (Ckpt.iterate) — no separate aggregate action
+    // per round; a zero sum is the empty graph, nothing to iterate.
+    // counts of neighbours at-or-above each candidate level; maxK is
+    // a small constant (bounded aggregate width)
+    val cnts = (2 to maxK).map(j =>
+      sum(when(col("c") >= j, 1L).otherwise(0L)).as(s"c$j"))
+    // H = largest j in [1, maxK] with cnt_j >= j (every vertex in sym
+    // has >= 1 neighbour, so H >= 1 unconditionally)
+    val h = (2 to maxK)
+        .foldLeft(lit(1): org.apache.spark.sql.Column) { (acc, j) =>
+      when(col(s"c$j") >= j, j).otherwise(acc)
     }
-    if (maxK > 1) {
-      var round = 0
-      var converged = last == 0L // empty graph: nothing to iterate
-      while (round < maxRounds && !converged) {
-        round += 1
-        // counts of neighbours at-or-above each candidate level;
-        // maxK is a small constant (bounded aggregate width)
-        val cnts = (2 to maxK).map(j =>
-          sum(when(col("c") >= j, 1L).otherwise(0L)).as(s"c$j"))
-        val nbr = sym
-          .join(state.select(col("id").as("src"), col("c")),
-            Seq("src"))
-          .groupBy(col("dst").as("id"))
-          .agg(cnts.head, cnts.tail: _*)
-        // H = largest j in [1, maxK] with cnt_j >= j (every vertex in
-        // sym has >= 1 neighbour, so H >= 1 unconditionally)
-        val h = (2 to maxK)
-            .foldLeft(lit(1): org.apache.spark.sql.Column) { (acc, j) =>
-          when(col(s"c$j") >= j, j).otherwise(acc)
-        }
-        val (s2, ns) = Ckpt.cutCounted(
-          state
-            .join(nbr, Seq("id"))
-            .select(col("id"), least(col("c"), h).as("c")),
-          sum(col("c")))
-        state = s2
-        val cur = ns.head
-        converged = cur == last
-        last = cur
-      }
-      // loud truncation (the SCC kernels' pattern, advisory form):
-      // hitting the round cap before the fixpoint leaves
-      // OVERESTIMATED core numbers — h-index convergence is
-      // O(diameter)-ish on path-like graphs, so a caller that lowers
-      // maxRounds must see the truncation, not silently read upper
-      // bounds as coreness
-      if (!converged) System.err.println(
-        s"[graft] WARNING: coreNumbers stopped at maxRounds=" +
-          s"$maxRounds before the h-index fixpoint — returned " +
-          "values are upper bounds, not exact core numbers")
+    val c0 = sym.groupBy(col("src").as("id"))
+      .agg(least(count(lit(1)), lit(maxK.toLong)).cast("int").as("c"))
+    val fp = Ckpt.iterate(c0, if (maxK > 1) maxRounds else 0,
+        sum(col("c")))(Stop.Zero || Stop.Unchanged) { s =>
+      val nbr = sym
+        .join(s.df.select(col("id").as("src"), col("c")), Seq("src"))
+        .groupBy(col("dst").as("id"))
+        .agg(cnts.head, cnts.tail: _*)
+      s.df
+        .join(nbr, Seq("id"))
+        .select(col("id"), least(col("c"), h).as("c"))
     }
-    state.select(col("id"), col("c").as("core"))
+    // loud truncation (the SCC kernels' pattern, advisory form):
+    // hitting the round cap before the fixpoint leaves OVERESTIMATED
+    // core numbers — h-index convergence is O(diameter)-ish on
+    // path-like graphs, so a caller that lowers maxRounds must see
+    // the truncation, not silently read upper bounds as coreness
+    if (maxK > 1 && !fp.converged) System.err.println(
+      s"[graft] WARNING: coreNumbers stopped at maxRounds=" +
+        s"$maxRounds before the h-index fixpoint — returned " +
+        "values are upper bounds, not exact core numbers")
+    fp.df.select(col("id"), col("c").as("core"))
   }
 
   /** Synchronous label-propagation community detection, `rounds`
@@ -367,17 +324,14 @@ object Graph {
     val sym = bothDirections(edges, aCol, bCol)
       .distinct()
       .transform(Ckpt.cut)
-    var labels = sym.select(col("src").as("id")).distinct()
+    val own = sym.select(col("src").as("id")).distinct()
       .withColumn("label", col("id"))
-      .transform(Ckpt.cut)
-    var r = 0
-    while (r < rounds) {
-      r += 1
+    Ckpt.iterate(own, rounds)(Stop.Never) { s =>
       val votes = sym
-        .join(labels.select(col("id").as("src"), col("label")),
+        .join(s.df.select(col("id").as("src"), col("label")),
           Seq("src"))
         .select(col("dst").as("id"), col("label"))
-        .unionByName(labels) // self-vote
+        .unionByName(s.df) // self-vote
         .groupBy(col("id"), col("label"))
         .agg(count(lit(1)).as("c"))
       // arg-max as a HASH aggregate instead of a row_number window
@@ -386,14 +340,12 @@ object Graph {
       // vote rule — while partial-aggregating map-side and skipping
       // the window's per-round full sort. -c never overflows (c is
       // a positive count bounded by |V|+1).
-      labels = votes
+      votes
         .groupBy(col("id"))
         .agg(min(struct((-col("c")).as("nc"),
           col("label").as("label"))).as("m"))
         .select(col("id"), col("m.label").as("label"))
-        .transform(Ckpt.cut)
-    }
-    labels
+    }.df
   }
 
   /** Multi-source BFS hop distance, bounded at `maxHops`: label each
@@ -420,35 +372,35 @@ object Graph {
     val sym = bothDirections(edges, aCol, bCol)
       .distinct()
       .transform(Ckpt.cut)
-    // the level loop's emptiness probe rides the frontier checkpoint
-    // (Ckpt.cutCounted, r16) — one driver action per level, not two
-    var (frontier, nF) = {
-      val (c, ns) = Ckpt.cutCounted(
-        sources.select(col(srcCol).as("id")).distinct()
-          .withColumn("hop", lit(0)),
-        count(lit(1)))
-      (c, ns.head)
-    }
-    var visited = frontier
-    var h = 0
-    while (h < maxHops && nF > 0) {
-      h += 1
-      val (f, ns) = Ckpt.cutCounted(
-        sym
-          .join(frontier.select(col("id").as("src")), Seq("src"))
-          .select(col("dst").as("id")).distinct()
-          .join(visited.select(col("id")), Seq("id"), "left_anti")
-          .withColumn("hop", lit(h)),
-        count(lit(1)))
-      frontier = f
-      nF = ns.head
-      // visited stays a lazy union of the CHECKPOINTED frontiers —
-      // every leg is already materialized, so no recomputation and
-      // no extra materialization job per level (lineage depth is
-      // bounded by maxHops)
-      visited = visited.unionByName(frontier)
-    }
-    visited
+    levelBfs(sym, sources.select(col(srcCol).as("id")).distinct()
+      .withColumn("hop", lit(0)), Nil, maxHops)
+  }
+
+  /** The level-synchronous BFS behind [[bfsHops]], [[perSourceHops]]
+    * and [[directedHops]]: each level joins the frontier (keyed by
+    * `carry` + id) against `adj` (src, dst) and anti-joins the
+    * visited set. The emptiness probe rides the frontier's
+    * checkpoint (Ckpt.iterate) — one driver action per level. Visited
+    * stays a lazy union of the CHECKPOINTED frontiers: every leg is
+    * already materialized, so no recomputation and no extra job per
+    * level (lineage depth is bounded by maxHops).
+    *
+    * @return the union of every level's frontier (carry…, id, hop) */
+  private def levelBfs(adj: DataFrame, start: DataFrame,
+      carry: Seq[String], maxHops: Int): DataFrame = {
+    val keys = carry :+ "id"
+    val legs = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    val last = Ckpt.iterate(start, maxHops, count(lit(1)))(Stop.Zero) { s =>
+      legs += s.df
+      adj
+        .join(s.df.select(carry.map(col) :+ col("id").as("src"): _*),
+          Seq("src"))
+        .select(carry.map(col) :+ col("dst").as("id"): _*).distinct()
+        .join(legs.reduce(_ unionByName _).select(keys.map(col): _*),
+          keys, "left_anti")
+        .withColumn("hop", lit(s.rounds + 1))
+    }.df
+    (legs :+ last).reduce(_ unionByName _)
   }
 
   /** Per-source BFS hop distances, bounded at `maxHops`: like
@@ -473,32 +425,9 @@ object Graph {
     val sym = bothDirections(edges, aCol, bCol)
       .distinct()
       .transform(Ckpt.cut)
-    // emptiness probe fused into the level checkpoint (r16)
-    var (frontier, nF) = {
-      val (c, ns) = Ckpt.cutCounted(
-        sources.select(col(srcCol).as("root")).distinct()
-          .select(col("root"), col("root").as("id"), lit(0).as("hop")),
-        count(lit(1)))
-      (c, ns.head)
-    }
-    var visited = frontier
-    var h = 0
-    while (h < maxHops && nF > 0) {
-      h += 1
-      val (f, ns) = Ckpt.cutCounted(
-        sym
-          .join(frontier.select(col("root"), col("id").as("src")),
-            Seq("src"))
-          .select(col("root"), col("dst").as("id")).distinct()
-          .join(visited.select(col("root"), col("id")),
-            Seq("root", "id"), "left_anti")
-          .withColumn("hop", lit(h)),
-        count(lit(1)))
-      frontier = f
-      nF = ns.head
-      visited = visited.unionByName(frontier)
-    }
-    visited
+    levelBfs(sym, sources.select(col(srcCol).as("root")).distinct()
+        .select(col("root"), col("root").as("id"), lit(0).as("hop")),
+      Seq("root"), maxHops)
   }
 
   /** Deterministic random walks — the DeepWalk/node2vec corpus
@@ -552,17 +481,18 @@ object Graph {
     val degJ =
       if (deg.count() <= PageRank.BroadcastVertexCap) broadcast(deg)
       else deg
-    var walks = starts.toDF("start").distinct()
+    val start = starts.toDF("start").distinct()
       .join(deg.select(col("v").as("start")), Seq("start"))
       .crossJoin(broadcast(
         sym.sparkSession.range(walksPerNode).select(
           col("id").as("walk"))))
       .select(col("start"), col("walk"), lit(0).as("step"),
         col("start").as("vertex"))
-      .transform(Ckpt.cut)
-    var out = walks
-    for (t <- 1 to steps) {
-      walks = walks
+    val legs = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    val last = Ckpt.iterate(start, steps)(Stop.Never) { s =>
+      val (walks, t) = (s.df, s.rounds + 1)
+      legs += walks
+      walks
         .join(degJ, walks("vertex") === deg("v"))
         .select(col("start"), col("walk"),
           (conv(substring(md5(concat_ws("_", col("start"),
@@ -573,27 +503,10 @@ object Graph {
           col("rnk")), Seq("vertex", "rnk"))
         .select(col("start"), col("walk"), lit(t).as("step"),
           col("dst").as("vertex"))
-        .transform(Ckpt.cut)
-      out = out.unionByName(walks)
-    }
-    out
+    }.df
+    (legs :+ last).reduce(_ unionByName _)
   }
 
-  /** Sampled closeness centrality (Eppstein-Wang with deterministic
-    * pivots): BFS distances from the `pivots` smallest vertex ids
-    * ([[perSourceHops]]), folded into Wasserman-Faust normalized
-    * closeness in pure integer micro-units —
-    * `(k−1)²·10⁶ div (Σd·(|V|−1))` with k = pivots reached within
-    * `maxHops` — so the score chain is engine-exact (q198's
-    * contract, factored here for the SQL table-function surface).
-    *
-    * Scale shape: |pivots| simultaneous BFS frontiers (state is
-    * pivot×frontier-sized, never |V|²); the per-vertex fold is one
-    * groupBy; |V| rides a 1-row broadcast.
-    *
-    * @return (id, n_reached, sum_hops, closeness_micro) for every
-    *         vertex reached by at least one pivot (the pivot itself
-    *         counts via its 0-hop row); unordered — callers sort */
   /** Single-source DIRECTED BFS hops (shortest hop count from
     * `pivot`, edge direction respected — unlike [[perSourceHops]],
     * which symmetrizes). One join + one anti-join + one distinct per
@@ -604,27 +517,8 @@ object Graph {
     val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
       .distinct()
       .transform(Ckpt.cut)
-    var frontier = e.sparkSession.range(1)
-      .select(lit(pivot).as("id"), lit(0).as("hop"))
-      .transform(Ckpt.cut)
-    var visited = frontier
-    var h = 0
-    var nF = 1L
-    while (h < maxHops && nF > 0) {
-      h += 1
-      // emptiness probe fused into the level checkpoint (r16)
-      val (f, ns) = Ckpt.cutCounted(
-        e
-          .join(frontier.select(col("id").as("src")), Seq("src"))
-          .select(col("dst").as("id")).distinct()
-          .join(visited.select(col("id")), Seq("id"), "left_anti")
-          .withColumn("hop", lit(h)),
-        count(lit(1)))
-      frontier = f
-      nF = ns.head
-      visited = visited.unionByName(frontier)
-    }
-    visited
+    levelBfs(e, e.sparkSession.range(1)
+      .select(lit(pivot).as("id"), lit(0).as("hop")), Nil, maxHops)
   }
 
   /** The strongly connected component CONTAINING a pivot vertex, by
@@ -938,11 +832,12 @@ object Graph {
     * re-emitting them into a MIN changes nothing) at instance-join
     * cost proportional to the ACTIVE frontier, which after the
     * expansion waves pass is a tiny fraction of the reached set.
-    * The frontier diff is one vertex-sized left join per round; the
-    * frontier frame broadcasts when small. An empty frontier is a
-    * proven fixpoint, so remaining rounds are skipped — the output
-    * (witness included) is identical to running them, each would be
-    * a no-op. Nothing all-pairs, nothing driver-sized.
+    * The frontier diff rides the round's own aggregate (the previous
+    * arrival is a second min column), so a round is one cut. An
+    * empty frontier is a proven fixpoint, so remaining rounds are
+    * skipped — the output (witness included) is identical to
+    * running them, each would be a no-op. Nothing all-pairs, nothing
+    * driver-sized.
     *
     * @param tCol integer time column (epoch micros by convention —
     *             exact, hash-safe)
@@ -957,37 +852,30 @@ object Graph {
         col(tCol).as("t"))
       .filter(col("src") =!= col("dst"))
       .transform(Ckpt.cut)
-    var arr = e.sparkSession.range(1)
-      .select(lit(sourceId).as("id"), lit(0L).as("at"))
-      .transform(Ckpt.cut)
-    var delta = arr
-    var prev = arr
-    var i = 0
-    while (i < rounds && !delta.isEmpty) {
-      i += 1
-      prev = arr
+    // every arrival carries the previous round's time as at0 (null
+    // when first reached), FUSED into the round aggregate as a
+    // second min (only the carry row has at0 non-null) — the sccLabels
+    // COLOR trick. The improved frontier is then a filter of the one
+    // cut frame, its size is observed during the cut, and at0 IS the
+    // fixpoint witness: no delta cut, no changed-compare join and no
+    // emptiness action per round. An empty frontier leaves at = at0
+    // everywhere, identical to running the remaining (no-op) rounds.
+    val improved = col("at0").isNull || col("at") < col("at0")
+    val source = e.sparkSession.range(1).select(lit(sourceId).as("id"),
+      lit(0L).as("at"), lit(null).cast("long").as("at0"))
+    Ckpt.iterate(source, rounds,
+        count(when(improved, lit(1))))(Stop.Zero) { s =>
       val relaxed = e
-        .join(delta.select(col("id").as("src"), col("at")),
-          Seq("src"))
+        .join(s.df.filter(improved).select(col("id").as("src"),
+          col("at")), Seq("src"))
         .filter(col("t") >= col("at"))
-        .select(col("dst").as("id"), col("t").as("at"))
-      val merged = arr.unionByName(relaxed)
-        .groupBy(col("id")).agg(min(col("at")).as("at"))
-        .transform(Ckpt.cut)
-      delta = merged
-        .join(arr.select(col("id"), col("at").as("__old")),
-          Seq("id"), "left")
-        .filter(col("__old").isNull || col("at") < col("__old"))
-        .select(col("id"), col("at"))
-        .transform(Ckpt.cut)
-      arr = merged
-    }
-    // converged before the budget: arr is a fixpoint, so the witness
-    // reads at = at_prev everywhere — identical to running the
-    // remaining (no-op) rounds
-    if (i < rounds) prev = arr
-    arr.join(prev.select(col("id"), col("at").as("at_prev")),
-      Seq("id"), "left")
+        .select(col("dst").as("id"), col("t").as("at"),
+          lit(null).cast("long").as("at0"))
+      s.df.select(col("id"), col("at"), col("at").as("at0"))
+        .unionByName(relaxed)
+        .groupBy(col("id"))
+        .agg(min(col("at")).as("at"), min(col("at0")).as("at0"))
+    }.df.select(col("id"), col("at"), col("at0").as("at_prev"))
   }
 
   /** FULL strongly-connected-component decomposition — the
@@ -1050,10 +938,11 @@ object Graph {
     }
     val settled = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     var budget = maxRounds
+    def overBudget = new IllegalStateException(
+      s"sccLabels exceeded $maxRounds rounds before settling")
     def spend(): Unit = {
       budget -= 1
-      if (budget < 0) throw new IllegalStateException(
-        s"sccLabels exceeded $maxRounds rounds before settling")
+      if (budget < 0) throw overBudget
     }
     // Active-subgraph restriction of e to the current v — both semi
     // joins reference the SAME projected frame so the planner can
@@ -1076,7 +965,8 @@ object Graph {
       // single broadcast instead of two distinct-projection joins),
       // and keep, drop and the settled leg are cheap filters of the
       // one checkpointed flag frame; the convergence count rides the
-      // checkpoint job (Ckpt.cutCounted).
+      // checkpoint job (Ckpt.cutCounted). Hand-rolled: each round
+      // also re-cuts the restricted edge frame, a second state frame.
       var trimming = true
       while (trimming && nV > 0) {
         spend()
@@ -1120,30 +1010,27 @@ object Graph {
         // every active vertex has a carry row), so the improved set
         // is a filter of the round frame — no separate changed-
         // compare join, no second materialization, and the round's
-        // one count action doubles as the convergence test.
-        var color = v.select(col("id"), col("id").as("c"))
-          .transform(Ckpt.cut)
-        var improved = color
-        var nImp = nV
-        while (nImp > 0) {
-          spend()
+        // observed count doubles as the convergence test. A null c0
+        // (the initial frame) marks every vertex improved.
+        val improved = col("c0").isNull || col("c") < col("c0")
+        val colored = Ckpt.iterate(
+            v.select(col("id"), col("id").as("c"),
+              lit(null).cast("long").as("c0")),
+            budget, count(when(improved, lit(1))))(Stop.Zero) { s =>
           val prop = e
-            .join(improved.select(col("id").as("src"), col("c")),
-              Seq("src"))
+            .join(s.df.filter(improved).select(col("id").as("src"),
+              col("c")), Seq("src"))
             .select(col("dst").as("id"), col("c"),
               lit(null).cast("long").as("c0"))
-          val (upd, nImps) = Ckpt.cutCounted(
-            color
-              .select(col("id"), col("c"), col("c").as("c0"))
-              .unionByName(prop)
-              .groupBy(col("id"))
-              .agg(min(col("c")).as("c"), min(col("c0")).as("c0")),
-            count(when(col("c") < col("c0"), lit(1))))
-          improved = upd.filter(col("c") < col("c0"))
-            .select(col("id"), col("c"))
-          nImp = nImps.head
-          color = upd.select(col("id"), col("c"))
+          s.df
+            .select(col("id"), col("c"), col("c").as("c0"))
+            .unionByName(prop)
+            .groupBy(col("id"))
+            .agg(min(col("c")).as("c"), min(col("c0")).as("c0"))
         }
+        if (!colored.converged) throw overBudget
+        budget -= colored.rounds
+        val color = colored.df.select(col("id"), col("c"))
         // 3. SWEEP: backward BFS from every root inside its class,
         // tracked on a REMAINING frame (r16): remaining = active
         // vertices not yet reached (roots excluded at init), and each
@@ -1154,7 +1041,9 @@ object Graph {
         // on (id, c) itself: remaining carries each vertex's color.
         // When the frontier dries up, remaining IS the next outer
         // round's vertex set (v ∖ reached) — already materialized,
-        // already counted; no post-sweep anti-join.
+        // already counted; no post-sweep anti-join. Hand-rolled: its
+        // first round reads two filters of the color cut, and cutting
+        // them as one frame would cost a job per outer round.
         var frontier = color.filter(col("id") === col("c"))
         settled += frontier.select(col("id"), col("c").as("scc"))
         var remaining = color.filter(col("id") =!= col("c"))
@@ -1288,6 +1177,21 @@ object Graph {
       .agg(sum(col("delta")).as("bet_ppm"))
   }
 
+  /** Sampled closeness centrality (Eppstein-Wang with deterministic
+    * pivots): BFS distances from the `pivots` smallest vertex ids
+    * ([[perSourceHops]]), folded into Wasserman-Faust normalized
+    * closeness in pure integer micro-units —
+    * `(k−1)²·10⁶ div (Σd·(|V|−1))` with k = pivots reached within
+    * `maxHops` — so the score chain is engine-exact (q198's
+    * contract, factored here for the SQL table-function surface).
+    *
+    * Scale shape: |pivots| simultaneous BFS frontiers (state is
+    * pivot×frontier-sized, never |V|²); the per-vertex fold is one
+    * groupBy; |V| rides a 1-row broadcast.
+    *
+    * @return (id, n_reached, sum_hops, closeness_micro) for every
+    *         vertex reached by at least one pivot (the pivot itself
+    *         counts via its 0-hop row); unordered — callers sort */
   def sampledCloseness(edges: DataFrame, aCol: String, bCol: String,
       pivots: Int, maxHops: Int): DataFrame = {
     require(pivots >= 1, s"pivots must be >= 1: $pivots")

@@ -76,17 +76,6 @@ object PageRank {
     * @return (id, r) — final micro-unit rank per node that has at
     *         least one edge
     */
-  /** Source-compat overload for the original `Boolean` surface
-    * (pre-round-5 callers passed `broadcastRanks = true/false`
-    * positionally or by name): delegates to the `Option` form with
-    * the decision forced. Note the no-arg default changed in round 5
-    * from always-broadcast to data-driven (`None`), which adds one
-    * metadata-count job per call off the checkpointed adjacency —
-    * callers wanting the old unconditional behavior pass `true` here. */
-  def integerRanks(edges: DataFrame, srcCol: String, dstCol: String,
-      iters: Int, broadcastRanks: Boolean): DataFrame =
-    integerRanks(edges, srcCol, dstCol, iters, Some(broadcastRanks))
-
   def integerRanks(edges: DataFrame, srcCol: String, dstCol: String,
       iters: Int, broadcastRanks: Option[Boolean] = None): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
@@ -237,6 +226,8 @@ object PageRank {
     // already on hand from the dangling-share denominator
     val bc = broadcastRanks.getOrElse(nV <= BroadcastVertexCap)
     def bcast(df: DataFrame) = if (bc) broadcast(df) else df
+    // hand-rolled, not Ckpt.iterate: the start is a projection of the
+    // cut vertex frame, and cutting it again would cost a job
     var ranks = verts.select(col("id"), lit(1000000L).as("r"))
     for (_ <- 1 to iters) {
       val joined = verts.join(bcast(ranks.select(
@@ -388,6 +379,8 @@ object PageRank {
     // Sums widen to decimal(38,0): matches DuckDB's HUGEINT SUM, and
     // overflow degrades to NULL (caught by the witness), never wraps.
     def wide(c: Column): Column = c.cast("decimal(38,0)")
+    // hand-rolled, not Ckpt.iterate: a round is two cuts (auths, then
+    // hubs) and the trace keeps every half-round frame
     var hubs = e.select(col("src").as("id")).distinct()
       .select(col("id"), lit(1000000L).as("v"))
     var auths = hubs.limit(0)

@@ -79,8 +79,10 @@ object Pca {
     * test embeddings) and within a few rounds falls under any fixed
     * rounding scale, destroying both precision and determinism.
     * Keeping the iterate unit-length keeps every rounded term O(1).
-    * The per-round norm is one driver scalar (a d-vector aggregate);
-    * sign is the deterministic one the all-ones start converges to.
+    * The per-round norm is one driver scalar (a d-vector aggregate)
+    * observed while the round's matvec is cut (Ckpt.iterate), so a
+    * round is one job; sign is the deterministic one the all-ones
+    * start converges to.
     *
     * @return (pos, loading) — d rows, Σ loading² = 1; all-zero
     *         loadings (and no error) when the matrix is zero/empty
@@ -89,25 +91,28 @@ object Pca {
       iters: Int): DataFrame = {
     require(iters >= 1, s"iters must be >= 1: $iters")
     val spark = df.sparkSession
-    val cov = covariance(df, embCol, dim).localCheckpoint(true)
-    var v: DataFrame = spark.range(dim)
+    val cov = Ckpt.cut(covariance(df, embCol, dim))
+    // the matvec w scaled to unit length by its observed squared norm
+    def unit(w: Ckpt.Fixpoint): DataFrame = {
+      val norm = math.sqrt(w.metrics.head match {
+        case null => 0d
+        case n2: java.lang.Double => n2
+      })
+      if (norm == 0d) w.df // zero/empty matrix: stay put, no /0
+      else w.df.select(col("pos"), (col("v") / lit(norm)).as("v"))
+    }
+    val ones = spark.range(dim)
       .select(col("id").cast("int").as("pos"), lit(1.0d).as("v"))
-    var it = 0
-    while (it < iters) {
-      it += 1
-      val w = cov
+    val last = Ckpt.iterate(ones, iters,
+        dsum(col("v") * col("v"), 12))(Ckpt.Stop.Never) { w =>
+      // the all-ones start is used as is, not scaled by its norm
+      val v = if (w.rounds == 0) w.df else unit(w)
+      cov
         .join(broadcast(v.select(col("pos").as("j"), col("v"))),
           Seq("j"))
         .groupBy(col("i").as("pos"))
         .agg(dsum(col("c") * col("v"), 9).as("v"))
-        .localCheckpoint(true)
-      val r = w.agg(dsum(col("v") * col("v"), 12).as("s")).head()
-      val n2 = if (r.isNullAt(0)) 0d else r.getDouble(0)
-      val norm = math.sqrt(n2)
-      v =
-        if (norm == 0d) w // zero/empty matrix: stay put, no /0
-        else w.select(col("pos"), (col("v") / lit(norm)).as("v"))
     }
-    v.select(col("pos"), col("v").as("loading"))
+    unit(last).select(col("pos"), col("v").as("loading"))
   }
 }

@@ -191,7 +191,7 @@ object Similarity {
     val pool = candidates
       .select(col(idCol).cast("long").as("id"), col(embCol).as("e"),
         cosine(col(embCol), qCol).as("rel"))
-      .localCheckpoint(true)
+      .transform(Ckpt.cut)
     val selected = scala.collection.mutable.ArrayBuffer
       .empty[(Long, Array[Float], Double)]
     var step = 0
@@ -267,7 +267,7 @@ object Similarity {
     val spark = corpus.sparkSession
     val pool = corpus
       .select(col(idCol).cast("long").as("id"), col(embCol).as("e"))
-      .localCheckpoint(true)
+      .transform(Ckpt.cut)
     val n = pool.count()
     require(n > 0, "farthestFirst: empty corpus")
     require(k <= n,
@@ -278,7 +278,9 @@ object Similarity {
     def litVec(v: Array[Float]) = array(v.map(lit(_)): _*)
     var mind = pool
       .withColumn("mind", dist2(col("e"), litVec(picked.head._2)))
-      .localCheckpoint(true)
+      .transform(Ckpt.cut)
+    // hand-rolled, not Ckpt.iterate: each round's step needs the
+    // driver collect of the previous pick
     var step = 1
     while (step < k) {
       step += 1
@@ -291,7 +293,7 @@ object Similarity {
       mind = mind
         .withColumn("mind",
           least(col("mind"), dist2(col("e"), litVec(picked.last._2))))
-        .localCheckpoint(true)
+        .transform(Ckpt.cut)
     }
     val radius = mind.agg(max(col("mind"))).collect()(0).getDouble(0)
     import spark.implicits._

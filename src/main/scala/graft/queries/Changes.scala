@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.{Qry, Tables}
-import graft.operators.{Attribution, Cdc, Splits}
+import graft.operators.{Attribution, Cdc, Ckpt, Splits}
 import Q._
 
 /** Operational-analytics change operators: CDC log apply (q162),
@@ -315,7 +315,7 @@ object Changes {
           coalesce(col("cb"), lit(0L)).as("cents"))
         .filter(col("op").isNotNull)
         // consumed by the log AND the digest — materialize once
-        .localCheckpoint(true)
+        .transform(Ckpt.cut)
       val log = snapA.select(col("k"), lit(0L).as("seq"),
           lit("I").as("op"), col("cents"))
         .unionByName(diff.select(col("k"), lit(1L).as("seq"),

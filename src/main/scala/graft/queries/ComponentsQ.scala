@@ -4,7 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.{Qry, Tables}
-import graft.operators.{Components, Cooccur, Dedup, Graph, PageRank}
+import graft.operators.{Ckpt, Components, Cooccur, Dedup, Graph,
+  PageRank}
 
 /** Transitive near-dup clustering (the connected-components upgrade
   * to greedy pairwise dedup). The fixture manufactures genuine
@@ -230,7 +231,7 @@ object ComponentsQ {
         .join(e.as("e3"),
           col("tb") === col("e3.a") && col("tc") === col("e3.b"))
         .select(col("ta"), col("tb"), col("tc"))
-        .localCheckpoint(true)
+        .transform(Ckpt.cut)
       val perNode = tri.select(col("ta").as("pk"))
         .unionAll(tri.select(col("tb").as("pk")))
         .unionAll(tri.select(col("tc").as("pk")))
@@ -304,7 +305,7 @@ object ComponentsQ {
         when(col("ka") < col("kb"), col("a")).otherwise(col("b")).as("s"),
         when(col("ka") < col("kb"), col("b")).otherwise(col("a")).as("t"),
         greatest(col("ka"), col("kb")).as("kt"))
-        .localCheckpoint(true)
+        .transform(Ckpt.cut)
       val tri = o.as("o1")
         .join(o.as("o2"),
           col("o1.s") === col("o2.s") && col("o1.kt") < col("o2.kt"))
@@ -313,7 +314,7 @@ object ComponentsQ {
         .join(o.as("o3"),
           col("w1") === col("o3.s") && col("w2") === col("o3.t"))
         .select(col("w0"), col("w1"), col("w2"))
-        .localCheckpoint(true)
+        .transform(Ckpt.cut)
       val perNode = tri.select(col("w0").as("pk"))
         .unionAll(tri.select(col("w1").as("pk")))
         .unionAll(tri.select(col("w2").as("pk")))
@@ -641,7 +642,7 @@ object ComponentsQ {
   /** Spark side of [[basketGraphSql]]: the same sparse co-purchase
     * edge set (one direction; the graph operators symmetrize). */
   private def basketEdges(s: SparkSession, d: String) = {
-    import graft.operators.{Ckpt, Splits}
+    import graft.operators.Splits
     val li = Tables.lineitem(s, d)
       .filter(Splits.hashBucket(col("l_orderkey")) < 15 &&
         col("l_linenumber") <= 3)

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.{Qry, Tables}
-import graft.operators.{Corpus, Dedup, Splits, TextOps}
+import graft.operators.{Ckpt, Corpus, Dedup, Splits, TextOps}
 import Q._
 
 /** Corpus-curation queries (the cross-document LLM-pipeline passes
@@ -186,7 +186,7 @@ object CorpusQ {
       val freq = Tables.documents(s, d)
         .select(explode(TextOps.tokens(col("text"))).as("tok"))
         .groupBy(col("tok")).agg(count(lit(1)).as("freq"))
-        .localCheckpoint(true)
+        .transform(Ckpt.cut)
       val w = Window.orderBy(col("freq").desc, col("tok"))
       freq
         .orderBy(col("freq").desc, col("tok")).limit(30)

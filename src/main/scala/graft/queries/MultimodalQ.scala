@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.{Qry, Tables}
-import graft.operators.Multimodal
+import graft.operators.{Ckpt, Multimodal}
 import Q._
 
 /** Multimodal queries. q41: metadata-only envelope stats over binary
@@ -376,7 +376,7 @@ object MultimodalQ {
       // hashes feed BOTH sides of the band self-join — checkpoint so
       // the encode→decode→hash pass runs once (the q128 pattern; at
       // scale you materialize the 16-byte hashes, never decode twice)
-      val hashes = Multimodal.dHash(media).toDF().localCheckpoint(true)
+      val hashes = Multimodal.dHash(media).toDF().transform(Ckpt.cut)
       Multimodal.dhashNearDupPairs(hashes, "media_id", maxHamming = 12)
         .orderBy(col("a"), col("b"))
     },
@@ -409,7 +409,7 @@ object MultimodalQ {
         .select(col("doc_id")).as[Long]
         .map(audMedia(_, 0L))
       val hashes = Multimodal.audioFingerprint(media).toDF()
-        .localCheckpoint(true)
+        .transform(Ckpt.cut)
       Multimodal.dhashNearDupPairs(hashes, "media_id", maxHamming = 12)
         .orderBy(col("a"), col("b"))
     },
@@ -442,7 +442,7 @@ object MultimodalQ {
         .select(col("doc_id")).as[Long]
         .map(vidMedia(_, 0L))
       val hashes = Multimodal.videoFingerprint(media).toDF()
-        .localCheckpoint(true)
+        .transform(Ckpt.cut)
       Multimodal.dhashNearDupPairs(hashes, "media_id", maxHamming = 12)
         .orderBy(col("a"), col("b"))
     },
@@ -478,13 +478,13 @@ object MultimodalQ {
       val vids = base.map(vidMedia(_, 2000L))
       val ih = Multimodal.dHash(imgs).toDF()
         .select(col("media_id"), col("h_hi"), col("h_lo"))
-        .localCheckpoint(true)
+        .transform(Ckpt.cut)
       val ah = Multimodal.audioFingerprint(auds).toDF()
         .select(col("media_id"), col("h_hi"), col("h_lo"))
-        .localCheckpoint(true)
+        .transform(Ckpt.cut)
       val vh = Multimodal.videoFingerprint(vids).toDF()
         .select(col("media_id"), col("h_hi"), col("h_lo"))
-        .localCheckpoint(true)
+        .transform(Ckpt.cut)
       val pairs = Multimodal
         .dhashNearDupPairs(ih, "media_id", maxHamming = 12)
         .unionByName(Multimodal
@@ -583,7 +583,7 @@ object MultimodalQ {
         .select(col("doc_id")).as[Long]
         .map(vidTrimMedia _)
       val signs = Multimodal.videoEnergySigns(media)
-        .localCheckpoint(true)
+        .transform(Ckpt.cut)
       graft.operators.Dedup.lshNearDupPairs(signs, "media_id",
           "sign_text", n = 16, k = 8, bands = 4, minJaccard = 0.5)
         .orderBy(col("a"), col("b"))

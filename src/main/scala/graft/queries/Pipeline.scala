@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.{Qry, Tables}
-import graft.operators.{Components, Dedup, Quantize, Splits}
+import graft.operators.{Ckpt, Components, Dedup, Quantize, Splits}
 import Q._
 
 /** Training-data pipeline operators beyond dedup/similarity:
@@ -513,14 +513,14 @@ object Pipeline {
       // so the LSH pass runs once
       val pairs = Dedup.lshNearDupPairs(corpus, "doc_id", "text",
         n = 3, k = 6, bands = 3, minJaccard = 0.93)
-        .localCheckpoint(true)
+        .transform(Ckpt.cut)
       val cuts = Seq("train" -> 80, "val" -> 90, "test" -> 100)
       val assign = Components
         .connectedComponents(corpus, "doc_id", pairs, "a", "b")
         .select(col("id"), col("component"),
           Splits.splitAssign(col("component"), cuts).as("split"),
           Splits.splitAssign(col("id"), cuts).as("naive_split"))
-        .localCheckpoint(true)
+        .transform(Ckpt.cut)
       val edges = pairs.select(col("a").as("src"), col("b").as("dst"))
         .unionByName(
           pairs.select(col("b").as("src"), col("a").as("dst")))

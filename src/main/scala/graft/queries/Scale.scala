@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.{Qry, Tables}
-import graft.operators.Skew
+import graft.operators.{Ckpt, Skew}
 import Q._
 
 /** Scale-technique queries: salted aggregation (skew spreading) and
@@ -244,7 +244,7 @@ object Scale {
       val sk = m.groupBy(col("seg"))
         .agg(expr("hll_sketch_agg(o, 14)").as("state"),
           count(lit(1)).as("exact_n"))
-        .localCheckpoint(true)
+        .transform(Ckpt.cut)
       val exactBoth = m.as("x")
         .join(m.as("y"), col("x.o") === col("y.o") &&
           col("x.seg") < col("y.seg"))

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.{Qry, Tables}
-import graft.operators.{BigramLm, Postings, Repetition}
+import graft.operators.{BigramLm, Ckpt, Postings, Repetition}
 import Q._
 
 /** Corpus statistical signals for training-data curation: the
@@ -224,7 +224,7 @@ object Signals {
       // tokenize ONCE: both models and both scoring passes consume
       // the same checkpointed gram relation
       val g = BigramLm.docGrams(docs, "doc_id", "text")
-        .localCheckpoint(true)
+        .transform(Ckpt.cut)
       val tgtGrams = g.join(
         docs.filter(col("source") === "src7").select(col("doc_id")),
         Seq("doc_id"), "left_semi")

@@ -5,6 +5,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 
 import graft.{Model, Qry, Tables}
+import graft.operators.Ckpt
 
 /** SQL front-end surface: the engine's tables exposed as views and
   * queried through `spark.sql`, proving the declarative path
@@ -152,7 +153,7 @@ object SqlSurface {
         .groupBy(col("l_returnflag"), col("l_linestatus"))
         .agg(sum(revenue).as("sum_rev"), sum(qty).as("sum_qty"),
           count(lit(1)).as("cnt"))
-        .localCheckpoint(true)
+        .transform(Ckpt.cut)
       graft.plans.MvRegistry.register(
         base = li,
         dims = Map("l_returnflag" -> "l_returnflag",
@@ -171,7 +172,7 @@ object SqlSurface {
             4).as("revenue"),
           Q.dsum(col("l_quantity"), 2).as("sum_qty"),
           count(lit(1)).as("n_items"))
-        .localCheckpoint(true)
+        .transform(Ckpt.cut)
       graft.plans.MvRegistry.clear()
       res.orderBy(col("l_returnflag"))
     },
@@ -217,7 +218,7 @@ object SqlSurface {
           FROM lineitem a JOIN lineitem b
             ON a.l_orderkey = b.l_orderkey
            AND a.l_partkey <> b.l_partkey""")
-        .localCheckpoint(true)
+        .transform(Ckpt.cut)
         .createOrReplaceTempView("q237_edges")
       s.sql(s"""
         WITH RECURSIVE reach(id, hop) AS (

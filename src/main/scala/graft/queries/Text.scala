@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.{Qry, Tables}
-import graft.operators.{Similarity, TextOps}
+import graft.operators.{Ckpt, Similarity, TextOps}
 import Q._
 
 /** Text-analysis + exact-dedup queries over `documents` (SURVEY.md
@@ -259,7 +259,7 @@ object Text {
             size(filter(col("t"), x => x === lit(t)))
               .cast("long").as(s"tf$i")
           }.toList: _*)
-      .localCheckpoint()
+      .transform(Ckpt.cut)
     val g = tf.agg(
       count(lit(1)).as("nd"),
       sum(col("dl")).as("sdl") +:

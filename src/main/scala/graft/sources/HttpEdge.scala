@@ -73,8 +73,10 @@ object HttpEdge {
         fetchJson(fetchUrl, Map("x-api-key" -> apiKey)), cfg)
       catch {
         case NonFatal(e) =>
-          System.err.println("[graft] metlink fetch/transform failed, " +
-            s"submitting empty FeatureCollection: ${e.getMessage}")
+          // e.toString names the class: a refused connection's
+          // message alone is null
+          System.err.println("[graft] metlink fetch/transform of " +
+            s"$fetchUrl failed, submitting empty FeatureCollection: $e")
           EmptyFeatureCollection
       }
     postJson(submitUrl, fc)

@@ -40,12 +40,6 @@ object Sources {
       .option("columnNameOfCorruptRecord", "_corrupt_record")
       .json(path)
 
-  /** Schema'd CSV reader (header-aware), same discipline. */
-  def csvFiles(spark: SparkSession, path: String,
-      schema: StructType): DataFrame =
-    spark.read.schema(schema).option("header", "true")
-      .option("mode", "PERMISSIVE").csv(path)
-
   /** S2: shape validation — fail fast when a required top-level
     * column is null/absent across the batch (the reference throws on
     * a missing `entity` array, task.ts:174-179). */

@@ -8,6 +8,8 @@ import org.apache.spark.sql.types.StructType
 
 import java.sql.Timestamp
 
+import graft.operators.Ckpt
+
 /** Structured Streaming surface (SURVEY.md §2.B G12): the streaming
   * twins of the batch window/sessionize/dedup operators, plus the
   * scheduled-micro-batch ingest pattern that mirrors the reference's
@@ -753,7 +755,7 @@ object StreamOps {
       minJaccard: Double): DataFrame = {
     import graft.operators.Dedup
     val spark = batch.sparkSession
-    val b = batch.select(col(idCol), col(textCol)).localCheckpoint(true)
+    val b = batch.select(col(idCol), col(textCol)).transform(Ckpt.cut)
     val intraRejects = Dedup.lshNearDupPairs(
         b, idCol, textCol, n, k, bands, minJaccard)
       .select(col("b").as(idCol)).distinct()
@@ -764,7 +766,7 @@ object StreamOps {
       .select(col("a").as(idCol)).distinct()
     val admitted = survivors
       .join(indexRejects, Seq(idCol), "left_anti")
-      .localCheckpoint(true)
+      .transform(Ckpt.cut)
     admitted.write.mode("append").parquet(indexDir)
     admitted
   }
@@ -820,14 +822,14 @@ object StreamOps {
     import graft.operators.Multimodal
     val spark = batch.sparkSession
     val kinds = Seq("image", "audio", "video")
-    val h = Multimodal.mediaFingerprints(batch).localCheckpoint(true)
+    val h = Multimodal.mediaFingerprints(batch).transform(Ckpt.cut)
     val intraRejects = kinds.map { k =>
       Multimodal.dhashNearDupPairs(
           h.filter(col("kind") === k), "media_id", maxHamming)
         .select(col("b").as("media_id"))
     }.reduce(_ unionByName _).distinct()
     val survivors = h.join(intraRejects, Seq("media_id"), "left_anti")
-      .localCheckpoint(true)
+      .transform(Ckpt.cut)
     val index = readIndexOrEmpty(spark, indexDir, h.schema)
     val indexRejects = kinds.map { k =>
       Multimodal.dhashNearDupPairsAcross(
@@ -837,7 +839,7 @@ object StreamOps {
     }.reduce(_ unionByName _).distinct()
     val admitted = survivors
       .join(indexRejects, Seq("media_id"), "left_anti")
-      .localCheckpoint(true)
+      .transform(Ckpt.cut)
     admitted.write.mode("append").parquet(indexDir)
     admitted
   }
@@ -997,7 +999,7 @@ object StreamOps {
       if (!fs.exists(dst))
         // first trigger only — later triggers must not pay a
         // checkpoint job for a frame they discard
-        Cdc.mergeLatest(batch.localCheckpoint(true), keyCols, seqCol,
+        Cdc.mergeLatest(batch.transform(Ckpt.cut), keyCols, seqCol,
           opCol, keepTombstones = true)
       else {
         // prior snapshot re-enters the merge as its own change log
@@ -1008,7 +1010,7 @@ object StreamOps {
           prev.unionByName(batch.select(prev.columns.map(col): _*)),
           keyCols, seqCol, opCol, keepTombstones = true)
       }
-    val out = merged.localCheckpoint(true)
+    val out = merged.transform(Ckpt.cut)
     val tmp = new Path(snapshotDir + ".applying")
     val old = new Path(snapshotDir + ".old")
     require(!fs.exists(tmp) && !fs.exists(old),
@@ -1040,10 +1042,10 @@ object StreamOps {
     require(fs.exists(dst),
       s"applyErasureBatch: no snapshot at $snapshotDir — erasure " +
         "edits an existing table, it does not create one")
-    val keys = batch.localCheckpoint(true)
+    val keys = batch.transform(Ckpt.cut)
     val prev = spark.read.parquet(snapshotDir)
     val before = prev.count()
-    val out = Erasure.retain(prev, fkCol, keys).localCheckpoint(true)
+    val out = Erasure.retain(prev, fkCol, keys).transform(Ckpt.cut)
     val after = out.count()
     val tmp = new Path(snapshotDir + ".applying")
     val old = new Path(snapshotDir + ".old")

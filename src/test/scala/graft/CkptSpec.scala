@@ -37,19 +37,34 @@ class CkptSpec extends SparkSpec {
   }
 
   test("reliable and local modes are output-identical on kernels") {
-    def run(): (Set[(Long, Long)], Set[(Long, Int)]) = {
+    def rows(df: org.apache.spark.sql.DataFrame): Set[String] =
+      df.collect().map(_.toString).toSet
+    val src = Seq(1L, 13L).toDF("s")
+    val docs = Seq((1L, "the quick brown fox jumps over a lazy dog"),
+      (2L, "the quick brown fox jumps over a lazy dog"),
+      (3L, "a stitch in time saves nine"))
+      .toDF("doc_id", "text")
+    def run() = {
       val cc = Components.connectedComponents(nodes, "id", edges,
           "a", "b")
         .as[(Long, Long)].collect().toSet
       val (core, _) = Graph.kCoreWithRounds(edges, "a", "b", k = 2,
         maxRounds = 20)
+      // the three BFS entry points share one level loop; Curate's
+      // exact-dedup frame is a plain (non-loop) cut
+      val more = Seq(
+        Graph.bfsHops(edges, "a", "b", src, "s", 3),
+        Graph.perSourceHops(edges, "a", "b", src, "s", 3),
+        Graph.directedHops(edges, "a", "b", 1L, 3),
+        operators.Curate.curate(docs, "doc_id", "text"))
       (cc, core.select(col("id"), col("deg").cast("int"))
-        .as[(Long, Int)].collect().toSet)
+        .as[(Long, Int)].collect().toSet, more.map(rows))
     }
     val local = run()
     val reliable = withReliable(run())
     assert(local == reliable)
     assert(local._1.map(_._2).toSet == Set(1L, 10L))
+    assert(local._3.forall(_.nonEmpty))
   }
 
   test("reliable mode actually writes round frames to the dir") {

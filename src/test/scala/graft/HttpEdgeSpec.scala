@@ -94,10 +94,21 @@ class HttpEdgeSpec extends SparkSpec {
 
   test("unreachable feed endpoint → empty FeatureCollection submitted") {
     withServer(200, fixtureJson) { (_, submitUrl, state) =>
-      val fc = HttpEdge.runMetlink(spark,
-        "http://127.0.0.1:1/feed", "k", submitUrl)
+      val err = new java.io.ByteArrayOutputStream()
+      val saved = System.err
+      System.setErr(new java.io.PrintStream(err, true))
+      val fc =
+        try HttpEdge.runMetlink(spark,
+          "http://127.0.0.1:1/feed", "k", submitUrl)
+        finally System.setErr(saved)
       assert(fc == HttpEdge.EmptyFeatureCollection)
       assert(state()._1 == HttpEdge.EmptyFeatureCollection)
+      // the logged line names the exception class and the feed URL (a
+      // refused connection's message is null)
+      val line = err.toString.linesIterator
+        .find(_.contains("metlink fetch/transform")).getOrElse("")
+      assert(line.contains("java.net.ConnectException") &&
+        line.contains("http://127.0.0.1:1/feed"), line)
     }
   }
 

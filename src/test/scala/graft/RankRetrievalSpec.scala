@@ -25,12 +25,12 @@ class RankRetrievalSpec extends SparkSpec {
       .as[(Long, Long)].collect().toMap
     assert(r1 == Map(1L -> 1850000L, 2L -> 858333L,
       3L -> 858333L, 4L -> 433333L))
-    // source-compat Boolean overload (pre-round-5 surface) agrees
-    // with the data-driven default on both forced decisions
+    // both forced broadcast decisions agree with the data-driven
+    // default
     for (b <- Seq(true, false)) {
       val rb = PageRank.integerRanks(edges, "src", "dst", iters = 1,
-        broadcastRanks = b).as[(Long, Long)].collect().toMap
-      assert(rb == r1, s"Boolean overload ($b) diverged")
+        broadcastRanks = Some(b)).as[(Long, Long)].collect().toMap
+      assert(rb == r1, s"forced broadcast ($b) diverged")
     }
   }
 
