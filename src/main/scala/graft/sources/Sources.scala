@@ -72,9 +72,10 @@ object Sources {
       out
     } catch {
       case NonFatal(e) =>
-        // the reference logs and submits an empty FeatureCollection
+        // the reference logs and submits an empty FeatureCollection;
+        // e.toString names the class even when the message is null
         System.err.println(s"[graft] pipeline failed, emitting " +
-          s"empty output: ${e.getMessage}")
+          s"empty output: $e")
         spark.createDataFrame(
           spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
           outputSchema)

@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate,
+  LocalRelation}
 import org.apache.spark.sql.functions._
 
 import graft.operators.Pq
@@ -124,6 +126,50 @@ class PqSpec extends SparkSpec {
       .orderBy(col("j"))
       .collect().map(_.getSeq[Float](2).toList).toList
     assert(ref === List(List(1000.0f, 1000.0f), List(1000.0f, 1000.0f)))
+  }
+
+  test("codebook and refine return driver-side local frames") {
+    assert(cb.queryExecution.optimizedPlan.isInstanceOf[LocalRelation])
+    val ref = Pq.refine(corpus, "id", "emb", cb, subDim = 2)
+    assert(ref.queryExecution.optimizedPlan.isInstanceOf[LocalRelation])
+  }
+
+  test("encode + adcTopK on a refined codebook build without a job, " +
+      "and the refine subtree never re-enters the ADC plan") {
+    val ref = Pq.refine(corpus, "id", "emb", cb, subDim = 2)
+    val q = corpus.filter(col("id") === 0L)
+    val (est, jobs) = withJobs("pq-build") {
+      val enc = Pq.encode(corpus, "id", "emb", ref, subDim = 2)
+      val est = Pq.adcTopK(q, "id", "emb", enc, "id", ref,
+        subDim = 2, k = 4)
+      est.queryExecution.optimizedPlan
+      est
+    }
+    assert(jobs.isEmpty, s"building started jobs $jobs")
+    // the scoring sum is the plan's only aggregate: refine's Lloyd
+    // M-step (its own aggregate) is a LocalRelation by now
+    val aggs = est.queryExecution.optimizedPlan.collect {
+      case a: Aggregate => a
+    }
+    assert(aggs.size === 1, est.queryExecution.optimizedPlan)
+  }
+
+  test("refine is independent of the corpus partitioning") {
+    def centroids(df: org.apache.spark.sql.DataFrame) =
+      Pq.refine(df, "id", "emb", cb, subDim = 2)
+        .collect().map(r => (r.getInt(0), r.getLong(1),
+          r.getSeq[Float](2).toList)).sortBy(t => (t._1, t._2)).toList
+    assert(centroids(corpus.repartition(3)) ===
+      centroids(corpus.repartition(1)))
+  }
+
+  test("refine rejects a non-dense codebook, naming Pq.refine") {
+    val holed = cb.filter(!(col("j") === 1 && col("m") === 1L))
+    val ex = intercept[IllegalArgumentException] {
+      Pq.refine(corpus, "id", "emb", holed, subDim = 2)
+    }
+    assert(ex.getMessage.contains("Pq.refine") &&
+      ex.getMessage.contains("not dense"), ex.getMessage)
   }
 
   test("pq_assign through SQL yields the codes Pq.encode produces") {

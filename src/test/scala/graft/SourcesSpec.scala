@@ -44,11 +44,20 @@ class SourcesSpec extends SparkSpec {
   test("withEmptyFallback: failing pipeline yields empty frame with schema") {
     val schema = StructType(Seq(StructField("id", StringType),
       StructField("n", LongType)))
-    val out = Sources.withEmptyFallback(spark, schema) {
-      spark.read.parquet("/nonexistent/path/xyz").select($"boom")
-    }
+    val err = new java.io.ByteArrayOutputStream()
+    val saved = System.err
+    System.setErr(new java.io.PrintStream(err, true))
+    val out =
+      try Sources.withEmptyFallback(spark, schema) {
+        spark.read.parquet("/nonexistent/path/xyz").select($"boom")
+      } finally System.setErr(saved)
     assert(out.schema == schema)
     assert(out.count() == 0)
+    // the logged line names the exception class, not just its message
+    // (which may be null)
+    val line = err.toString.linesIterator
+      .find(_.contains("pipeline failed")).getOrElse("")
+    assert(line.contains("org.apache.spark.sql.AnalysisException"), line)
   }
 
   test("partitioned parquet sink round-trips with partition pruning") {
