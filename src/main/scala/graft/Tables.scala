@@ -48,6 +48,23 @@ object Tables {
     // --conf spark.driver.extraJavaOptions) the trigger is a cheap
     // concurrent cycle, not a stop-the-world full GC.
     .config("spark.cleaner.periodicGC.interval", "90s")
+    // Generated-code cache sized to graft's working set. Spark's
+    // default keeps 100 compiled classes in an LRU cache, and a cyclic
+    // working set larger than an LRU cache misses on every access: each
+    // pass over the registry would re-run Janino (and re-warm the JIT)
+    // for nearly every class. Census (CodegenCensus, local[4],
+    // CODEGEN_r10.json): at cap 100, two sf0.001 registry passes
+    // compile 6861 then 6786 classes. Uncapped, Bench's shape (sf0.001
+    // warm-up, then two sf0.1 passes, one JVM) compiles 4299, then 299,
+    // then 81: 4679 live entries, and only the 80-150 per pass from
+    // queries whose source differs run to run keep arriving. 8192
+    // leaves headroom for a session's own queries and for the cache's
+    // 4 segments, each capped at a quarter; a full registry pass costs
+    // about 40 MB more metaspace than at cap 100.
+    // The conf is static and JVM-global: CodeGenerator reads it once,
+    // at the JVM's first code generation, so it takes effect only if
+    // this builder creates the JVM's first session.
+    .config("spark.sql.codegen.cache.maxEntries", "8192")
 
   /** Decouple CPU parallelism from scan splits: a NARROW source (a
     * single-row-group parquet file reads as ONE task regardless of

@@ -218,11 +218,11 @@ object Extras {
       val ev = Tables.events(s, d)
         .withColumn("k", nullif(col("event_type"), lit("click")))
       val a = ev.groupBy(col("k"))
-        .agg(count(lit(1)).as("n_events"))
+        .agg(count(lit(1)).as("n_events")).as("a")
       val b = ev.groupBy(col("k"))
-        .agg(countDistinct(col("user_id")).as("n_users"))
-      a.join(b, a("k") <=> b("k"))
-        .select(coalesce(a("k"), lit("NULL")).as("key"),
+        .agg(countDistinct(col("user_id")).as("n_users")).as("b")
+      a.join(b, col("a.k") <=> col("b.k"))
+        .select(coalesce(col("a.k"), lit("NULL")).as("key"),
           col("n_events"), col("n_users"))
         .orderBy(col("key"))
     },

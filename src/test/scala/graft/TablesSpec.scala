@@ -2,12 +2,16 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.types.{TimestampNTZType, TimestampType}
+import org.apache.spark.sql.catalyst.expressions.{Add, BoundReference, Literal}
+import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
+import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
 
 /** `Tables.load`'s schema cache: the same schema and rows as an
   * uncached read, no job on a repeat load of an unchanged table, and
-  * re-inference when the files or the reader confs change. */
+  * re-inference when the files or the reader confs change. Also
+  * `Tables.configure`'s generated-code cache size. */
 class TablesSpec extends SparkSpec {
 
   private val all = Seq("region", "nation", "customer", "supplier",
@@ -77,5 +81,22 @@ class TablesSpec extends SparkSpec {
     val j = a.join(b, a("o_orderkey") === b("o_orderkey"))
       .select(a("o_orderkey"), b("o_orderdate"))
     assert(j.count() == a.count())
+  }
+
+  test("the session's generated-code cache holds a working set past Spark's default 100") {
+    val key = "spark.sql.codegen.cache.maxEntries"
+    assert(spark.conf.get(key) == "8192")
+    // 120 distinct classes compiled twice in the same order: an LRU
+    // cache of 100 misses on nearly all of the second round
+    val projections = (0 until 120).map(i => Seq(
+      Add(BoundReference(0, LongType, nullable = false),
+        Literal(7340000L + i))))
+    def compiles(): Long = {
+      val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      projections.foreach(GenerateUnsafeProjection.generate(_))
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0
+    }
+    assert(compiles() == 120)
+    assert(compiles() == 0)
   }
 }
