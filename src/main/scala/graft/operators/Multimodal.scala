@@ -86,15 +86,6 @@ object Multimodal {
       h_hi: Long,
       h_lo: Long)
 
-  /** Wrap any table with a binary column into media records. */
-  def asMedia(df: DataFrame, idCol: String, binCol: String,
-      kindCol: String, sourceCol: String): Dataset[MediaRecord] = {
-    import df.sparkSession.implicits._
-    df.select(col(idCol).as("media_id"), col(kindCol).as("kind"),
-        col(binCol).as("payload"), col(sourceCol).as("source"))
-      .as[MediaRecord]
-  }
-
   // ---- header parsers (pure JVM, allocation-free inspection) ------
 
   private val PngSig =

@@ -1,9 +1,10 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, Row,
+  SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout,
-  OutputMode}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState,
+  GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
 
 import java.sql.Timestamp
@@ -118,17 +119,20 @@ object StreamOps {
       outDir: String, batchId: Long): Unit =
     batch.write.mode("overwrite").parquet(s"$outDir/batch_id=$batchId")
 
+  /** The one `foreachBatch` starter: a writer draining `df` through
+    * `f` with its offsets and sink commits under `checkpoint`. Callers
+    * add a trigger, if any, and `.start()`. */
+  private def eachBatch(df: DataFrame, checkpoint: String)(
+      f: (Dataset[Row], Long) => Unit): DataStreamWriter[Row] =
+    df.writeStream
+      .option("checkpointLocation", checkpoint)
+      .foreachBatch(f)
+
   /** Start a streaming query draining `df` through
     * [[writeBatchIdempotent]]. */
   def startIdempotentParquetSink(df: DataFrame, outDir: String,
-      checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    df.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (b: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        writeBatchIdempotent(b, outDir, id)
-      }
-      .start()
+      checkpoint: String): StreamingQuery =
+    eachBatch(df, checkpoint)(writeBatchIdempotent(_, outDir, _)).start()
 
   /** Streaming-safe telemetry (A2 at scale): named `observe()`
     * metrics ride the existing job — no separate count() action,
@@ -209,6 +213,50 @@ object StreamOps {
       }
   }
 
+  /** The one gap-session state machine, behind [[sessionizeWithState]]
+    * and the journey twins: per key, events within `gapMs` of the open
+    * session's end extend it and a larger gap closes it, in event-time
+    * order inside each micro-batch. An event-time timeout at
+    * `end + gapMs` closes a quiet key's session once the watermark
+    * (`gapMs` behind the latest event) passes it. `events` carries
+    * (key, ts, ...) columns; `event` maps a row to its event, `at` gives
+    * the event's time in ms and `order` the in-batch order. */
+  private def gapSessions[R, E, S: Encoder, O: Encoder](
+      events: Dataset[R], gapMs: Long)(key: R => Long, event: R => E,
+      at: E => Long, order: Ordering[E])(open: E => S,
+      extend: (S, E) => S, end: S => Long,
+      close: (Long, S) => Iterator[O]): Dataset[O] = {
+    require(gapMs > 0, s"gapMs must be > 0, got $gapMs")
+    events
+      .withWatermark("ts", s"${gapMs / 1000} seconds")
+      .groupByKey(key)(Encoders.scalaLong)
+      .flatMapGroupsWithState[S, O](
+        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
+        (k: Long, rows: Iterator[R], state: GroupState[S]) =>
+          if (rows.isEmpty && state.hasTimedOut) {
+            // watermark passed: close and emit the session
+            val s = state.get
+            state.remove()
+            close(k, s)
+          } else {
+            val closed = scala.collection.mutable.Buffer[O]()
+            var cur = state.getOption
+            // event-time order, so each in-batch gap decision sees the
+            // events as they happened
+            rows.map(event).toSeq.sorted(order).foreach { e =>
+              cur = Some(cur match {
+                case Some(s) if at(e) - end(s) <= gapMs => extend(s, e)
+                case Some(s) => closed ++= close(k, s); open(e)
+                case None => open(e)
+              })
+            }
+            state.update(cur.get)
+            state.setTimeoutTimestamp(end(cur.get) + gapMs)
+            closed.iterator
+          }
+      }
+  }
+
   /** Custom gap-sessionizer over flatMapGroupsWithState with
     * event-time timeout: emits a session row once the watermark
     * passes start-of-gap — arbitrary stateful logic beyond
@@ -220,41 +268,14 @@ object StreamOps {
   def sessionizeWithState(events: Dataset[(Long, Timestamp)],
       gapMs: Long): Dataset[Session] = {
     import events.sparkSession.implicits._
-    events
-      .toDF("key", "ts")
-      .withWatermark("ts", s"${gapMs / 1000} seconds")
-      .as[(Long, Timestamp)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[SessState, Session](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (key: Long, rows: Iterator[(Long, Timestamp)],
-         state: GroupState[SessState]) =>
-          if (rows.isEmpty && state.hasTimedOut) {
-            // watermark passed: close and emit the session
-            val s = state.get
-            state.remove()
-            Iterator(Session(key, new Timestamp(s.start),
-              new Timestamp(s.end), s.n))
-          } else {
-            val ts = rows.map(_._2.getTime).toSeq.sorted
-            val closed = scala.collection.mutable.Buffer[Session]()
-            var cur = state.getOption.orNull
-            ts.foreach { t =>
-              cur match {
-                case null => cur = SessState(t, t, 1L)
-                case s if t - s.end <= gapMs =>
-                  cur = SessState(s.start, math.max(s.end, t), s.n + 1)
-                case s =>
-                  closed += Session(key, new Timestamp(s.start),
-                    new Timestamp(s.end), s.n)
-                  cur = SessState(t, t, 1L)
-              }
-            }
-            state.update(cur)
-            state.setTimeoutTimestamp(cur.end + gapMs)
-            closed.iterator
-          }
-      }
+    gapSessions[(Long, Timestamp), Long, SessState, Session](
+        events.toDF("key", "ts").as[(Long, Timestamp)], gapMs)(
+        _._1, _._2.getTime, identity, Ordering.Long)(
+      open = t => SessState(t, t, 1L),
+      extend = (s, t) => SessState(s.start, math.max(s.end, t), s.n + 1),
+      end = _.end,
+      close = (key, s) => Iterator(Session(key, new Timestamp(s.start),
+        new Timestamp(s.end), s.n)))
   }
 
   /** One closed session's journey: the '>'-joined type n-grams of the
@@ -265,6 +286,25 @@ object StreamOps {
   // public: the state encoder's generated code must see the ctor
   final case class SessPathsState(start: Long, end: Long,
       evs: Seq[(Long, Long, String)]) // (tsMs, eventId, type)
+
+  /** [[gapSessions]] carrying each session's events, ordered inside a
+    * micro-batch by (ts, event-id) exactly as batch: the state of both
+    * journey twins, which differ only in what `close` emits. */
+  private def journeySessions[O: Encoder](
+      events: Dataset[(Long, Timestamp, Long, String)], gapMs: Long)(
+      close: (Long, SessPathsState) => Iterator[O]): Dataset[O] = {
+    import events.sparkSession.implicits._
+    type Ev = (Long, Long, String)
+    gapSessions[(Long, Timestamp, Long, String), Ev, SessPathsState, O](
+        events.toDF("key", "ts", "event_id", "event_type")
+          .as[(Long, Timestamp, Long, String)], gapMs)(
+        _._1, r => (r._2.getTime, r._3, r._4), _._1,
+        Ordering.by((e: Ev) => (e._1, e._2)))(
+      open = e => SessPathsState(e._1, e._1, Seq(e)),
+      extend = (s, e) =>
+        SessPathsState(s.start, math.max(s.end, e._1), s.evs :+ e),
+      end = _.end, close = close)
+  }
 
   /** Streaming twin of [[graft.operators.Journeys
     * .topPathsSessionized]] (q148): gap-sessionize per key with
@@ -288,46 +328,10 @@ object StreamOps {
     def grams(evs: Seq[(Long, Long, String)]): Seq[String] =
       evs.sortBy(e => (e._1, e._2)).map(_._3)
         .sliding(n).filter(_.size == n).map(_.mkString(">")).toSeq
-    def close(key: Long, s: SessPathsState): SessionPaths =
-      SessionPaths(key, new Timestamp(s.start), new Timestamp(s.end),
-        s.evs.size.toLong, grams(s.evs))
-    events
-      .toDF("key", "ts", "event_id", "event_type")
-      .withWatermark("ts", s"${gapMs / 1000} seconds")
-      .as[(Long, Timestamp, Long, String)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[SessPathsState, SessionPaths](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (key: Long, rows: Iterator[(Long, Timestamp, Long, String)],
-         state: GroupState[SessPathsState]) =>
-          if (rows.isEmpty && state.hasTimedOut) {
-            val s = state.get
-            state.remove()
-            Iterator(close(key, s))
-          } else {
-            // order within the batch by (ts, event_id) so in-batch
-            // gap decisions see events in event-time order
-            val batch = rows.toSeq
-              .map(r => (r._2.getTime, r._3, r._4))
-              .sortBy(e => (e._1, e._2))
-            val closed = scala.collection.mutable.Buffer[SessionPaths]()
-            var cur = state.getOption.orNull
-            batch.foreach { case e @ (t, _, _) =>
-              cur match {
-                case null => cur = SessPathsState(t, t, Seq(e))
-                case s if t - s.end <= gapMs =>
-                  cur = SessPathsState(s.start, math.max(s.end, t),
-                    s.evs :+ e)
-                case s =>
-                  closed += close(key, s)
-                  cur = SessPathsState(t, t, Seq(e))
-              }
-            }
-            state.update(cur)
-            state.setTimeoutTimestamp(cur.end + gapMs)
-            closed.iterator
-          }
-      }
+    journeySessions(events, gapMs) { (key, s) =>
+      Iterator(SessionPaths(key, new Timestamp(s.start),
+        new Timestamp(s.end), s.evs.size.toLong, grams(s.evs)))
+    }
   }
 
   /** One streaming row-pattern match — the [[graft.operators
@@ -352,53 +356,14 @@ object StreamOps {
       gapMs: Long, pattern: String): Dataset[SessionMatch] = {
     import events.sparkSession.implicits._
     val rx = graft.operators.Journeys.compilePattern(pattern).r
-    def matches(start: Long, key: Long,
-        evs: Seq[(Long, Long, String)]): Iterator[SessionMatch] = {
-      val str = evs.sortBy(e => (e._1, e._2)).map(_._3)
+    journeySessions(events, gapMs) { (key, s) =>
+      val str = s.evs.sortBy(e => (e._1, e._2)).map(_._3)
         .mkString("", ">", ">")
       rx.findAllIn(str).zipWithIndex.map { case (m, i) =>
-        SessionMatch(key, new Timestamp(start), i + 1L,
+        SessionMatch(key, new Timestamp(s.start), i + 1L,
           m.stripSuffix(">"), m.count(_ == '>').toLong)
       }
     }
-    def close(key: Long, s: SessPathsState): Iterator[SessionMatch] =
-      matches(s.start, key, s.evs)
-    events
-      .toDF("key", "ts", "event_id", "event_type")
-      .withWatermark("ts", s"${gapMs / 1000} seconds")
-      .as[(Long, Timestamp, Long, String)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[SessPathsState, SessionMatch](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (key: Long, rows: Iterator[(Long, Timestamp, Long, String)],
-         state: GroupState[SessPathsState]) =>
-          if (rows.isEmpty && state.hasTimedOut) {
-            val s = state.get
-            state.remove()
-            close(key, s)
-          } else {
-            val batch = rows.toSeq
-              .map(r => (r._2.getTime, r._3, r._4))
-              .sortBy(e => (e._1, e._2))
-            val closed =
-              scala.collection.mutable.Buffer[SessionMatch]()
-            var cur = state.getOption.orNull
-            batch.foreach { case e @ (t, _, _) =>
-              cur match {
-                case null => cur = SessPathsState(t, t, Seq(e))
-                case s if t - s.end <= gapMs =>
-                  cur = SessPathsState(s.start, math.max(s.end, t),
-                    s.evs :+ e)
-                case s =>
-                  closed ++= close(key, s)
-                  cur = SessPathsState(t, t, Seq(e))
-              }
-            }
-            state.update(cur)
-            state.setTimeoutTimestamp(cur.end + gapMs)
-            closed.iterator
-          }
-      }
   }
 
   /** One attribution credit row — the [[graft.operators.Attribution
@@ -464,6 +429,7 @@ object StreamOps {
       .withWatermark("ts", watermarkDelay)
       .as[(Long, Timestamp, Long, String, Double)]
       .groupByKey(_._1)
+      // not gapSessions: a conversion closes at the watermark, not a gap
       .flatMapGroupsWithState[AttrState, CreditRow](
         OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
         (_: Long, rows: Iterator[(Long, Timestamp, Long, String,
@@ -565,6 +531,7 @@ object StreamOps {
       .withWatermark("ts", watermarkDelay)
       .as[(Long, Timestamp, String)]
       .groupByKey(_._1)
+      // not gapSessions: a funnel closes at its horizon, not a gap
       .flatMapGroupsWithState[FunnelState, FunnelStage](
         OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
         (user: Long, rows: Iterator[(Long, Timestamp, String)],
@@ -630,6 +597,7 @@ object StreamOps {
     require(seqLen > 0, "seqLen must be positive")
     docs
       .groupByKey(_._1)
+      // not gapSessions: a shard's offset never closes or times out
       .flatMapGroupsWithState[PackState, PackedDoc](
         OutputMode.Append, GroupStateTimeout.NoTimeout) {
         (shard: Int, rows: Iterator[(Int, Long, Long)],
@@ -784,23 +752,17 @@ object StreamOps {
   def startNearDupAdmission(docs: DataFrame, tsCol: String,
       idCol: String, textCol: String, watermark: String,
       indexDir: String, checkpointDir: String, n: Int, k: Int,
-      bands: Int, minJaccard: Double)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    docs
+      bands: Int, minJaccard: Double): StreamingQuery = {
+    val fresh = docs
       .withColumn("__h", md5(col(textCol)))
       .withWatermark(tsCol, watermark)
       .dropDuplicatesWithinWatermark("__h")
       .drop("__h")
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row],
-          _: Long) =>
-        admitNearDupBatch(batch.toDF(), idCol, textCol, indexDir,
-          n, k, bands, minJaccard)
-        ()
-      }
-      .start()
+    eachBatch(fresh, checkpointDir) { (batch, _) =>
+      admitNearDupBatch(batch.toDF(), idCol, textCol, indexDir,
+        n, k, bands, minJaccard)
+    }.start()
+  }
 
   /** One micro-batch of the MEDIA near-dup admission gate — the
     * multimodal twin of [[admitNearDupBatch]], and the cross-modal
@@ -853,28 +815,23 @@ object StreamOps {
   def startMediaAdmission(media: DataFrame, tsCol: String,
       idCol: String, binCol: String, watermark: String,
       indexDir: String, checkpointDir: String, maxHamming: Int)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    media
+      : StreamingQuery = {
+    val fresh = media
       .withColumn("__h", md5(col(binCol)))
       .withWatermark(tsCol, watermark)
       .dropDuplicatesWithinWatermark("__h")
       .drop("__h")
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row],
-          _: Long) =>
-        val spark = batch.sparkSession
-        import spark.implicits._
-        val records = batch.select(
-            col(idCol).cast("long").as("media_id"),
-            lit("").as("kind"), col(binCol).as("payload"),
-            lit("stream").as("source"))
-          .as[graft.operators.Multimodal.MediaRecord]
-        admitMediaBatch(records, indexDir, maxHamming)
-        ()
-      }
-      .start()
+    eachBatch(fresh, checkpointDir) { (batch, _) =>
+      val spark = batch.sparkSession
+      import spark.implicits._
+      val records = batch.select(
+          col(idCol).cast("long").as("media_id"),
+          lit("").as("kind"), col(binCol).as("payload"),
+          lit("stream").as("source"))
+        .as[graft.operators.Multimodal.MediaRecord]
+      admitMediaBatch(records, indexDir, maxHamming)
+    }.start()
+  }
 
   /** Maintenance pass for the [[startNearDupAdmission]] index: the
     * per-trigger appends leave one small parquet file per micro-batch
@@ -889,21 +846,38 @@ object StreamOps {
     * batch a partial listing — same contract as any external table
     * rewrite under a stream-static join). */
   def compactAdmissionIndex(spark: SparkSession, indexDir: String,
-      targetBytes: Long): graft.operators.Compaction.Stats = {
+      targetBytes: Long): graft.operators.Compaction.Stats =
+    swapIn(spark, indexDir, ".compacting", "compaction") { tmp =>
+      graft.operators.Compaction.compactParquet(
+        spark, indexDir, tmp, targetBytes)
+    }
+
+  /** The one table swap: `write` stages the new table at
+    * `dir + staging`, two renames put it in place (`dir` → `dir.old`,
+    * unless this is the first write, then staging → `dir`) and the old
+    * table is deleted. A reader sees the whole old or the whole new
+    * table, apart from the brief window between the renames
+    * ([[cdcSnapshot]] reads `.old` there). A staging or `.old`
+    * directory left by an interrupted `what` stops the swap before
+    * anything is written; `staging` is "." + the job's verb
+    * (".applying"), which that message reuses.
+    * @return what `write` returned */
+  private def swapIn[T](spark: SparkSession, dir: String,
+      staging: String, what: String)(write: String => T): T = {
     import org.apache.hadoop.fs.Path
-    val tmp = new Path(indexDir + ".compacting")
-    val old = new Path(indexDir + ".old")
-    val dst = new Path(indexDir)
+    val tmp = new Path(dir + staging)
+    val old = new Path(dir + ".old")
+    val dst = new Path(dir)
     val fs = dst.getFileSystem(spark.sparkContext.hadoopConfiguration)
     require(!fs.exists(tmp) && !fs.exists(old),
-      s"stale $tmp / $old from an interrupted compaction — resolve " +
-        "manually before compacting again")
-    val stats = graft.operators.Compaction.compactParquet(
-      spark, indexDir, tmp.toString, targetBytes)
-    require(fs.rename(dst, old), s"rename $dst -> $old failed")
+      s"stale $tmp / $old from an interrupted $what — resolve " +
+        s"manually before ${staging.stripPrefix(".")} again")
+    val out = write(tmp.toString)
+    if (fs.exists(dst))
+      require(fs.rename(dst, old), s"rename $dst -> $old failed")
     require(fs.rename(tmp, dst), s"rename $tmp -> $dst failed")
     fs.delete(old, true)
-    stats
+    out
   }
 
   /** Streaming VARIANT ingest — q124's semi-structured parse path
@@ -1011,16 +985,8 @@ object StreamOps {
           keyCols, seqCol, opCol, keepTombstones = true)
       }
     val out = merged.transform(Ckpt.cut)
-    val tmp = new Path(snapshotDir + ".applying")
-    val old = new Path(snapshotDir + ".old")
-    require(!fs.exists(tmp) && !fs.exists(old),
-      s"stale $tmp / $old from an interrupted apply — resolve " +
-        "manually before applying again")
-    out.write.mode("overwrite").parquet(tmp.toString)
-    if (fs.exists(dst))
-      require(fs.rename(dst, old), s"rename $dst -> $old failed")
-    require(fs.rename(tmp, dst), s"rename $tmp -> $dst failed")
-    fs.delete(old, true)
+    swapIn(spark, snapshotDir, ".applying", "apply")(
+      out.write.mode("overwrite").parquet(_))
     out
   }
 
@@ -1047,15 +1013,8 @@ object StreamOps {
     val before = prev.count()
     val out = Erasure.retain(prev, fkCol, keys).transform(Ckpt.cut)
     val after = out.count()
-    val tmp = new Path(snapshotDir + ".applying")
-    val old = new Path(snapshotDir + ".old")
-    require(!fs.exists(tmp) && !fs.exists(old),
-      s"stale $tmp / $old from an interrupted apply — resolve " +
-        "manually before applying again")
-    out.write.mode("overwrite").parquet(tmp.toString)
-    require(fs.rename(dst, old), s"rename $dst -> $old failed")
-    require(fs.rename(tmp, dst), s"rename $tmp -> $dst failed")
-    fs.delete(old, true)
+    swapIn(spark, snapshotDir, ".applying", "apply")(
+      out.write.mode("overwrite").parquet(_))
     before - after
   }
 
@@ -1066,17 +1025,10 @@ object StreamOps {
     * broadcast anti-join + table swap). Exactly-once per micro-batch
     * from checkpointed offsets + the idempotent purge. */
   def startErasureApply(requests: DataFrame, snapshotDir: String,
-      checkpointDir: String, fkCol: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    requests.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row],
-          _: Long) =>
-        applyErasureBatch(batch.toDF(), snapshotDir, fkCol)
-        ()
-      }
-      .start()
+      checkpointDir: String, fkCol: String): StreamingQuery =
+    eachBatch(requests, checkpointDir) { (batch, _) =>
+      applyErasureBatch(batch.toDF(), snapshotDir, fkCol)
+    }.start()
 
   /** Standing streaming CDC apply: every micro-batch of change rows
     * folds into the snapshot via [[applyCdcBatch]]. Exactly-once
@@ -1086,17 +1038,10 @@ object StreamOps {
     * delivery count — the spec pins replay idempotence). */
   def startCdcApply(changes: DataFrame, snapshotDir: String,
       checkpointDir: String, keyCols: Seq[String], seqCol: String,
-      opCol: String): org.apache.spark.sql.streaming.StreamingQuery =
-    changes.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row],
-          _: Long) =>
-        applyCdcBatch(batch.toDF(), snapshotDir, keyCols, seqCol,
-          opCol)
-        ()
-      }
-      .start()
+      opCol: String): StreamingQuery =
+    eachBatch(changes, checkpointDir) { (batch, _) =>
+      applyCdcBatch(batch.toDF(), snapshotDir, keyCols, seqCol, opCol)
+    }.start()
 
   /** One micro-batch of the declarative streaming upsert: collapse
     * the batch to its per-key latest change ([[graft.operators.Cdc
@@ -1156,16 +1101,10 @@ object StreamOps {
     * what lets the user's session see each micro-batch's result. */
   def startMergeUpsert(changes: DataFrame, targetTable: String,
       checkpointDir: String, keyCols: Seq[String], seqCol: String,
-      opCol: String): org.apache.spark.sql.streaming.StreamingQuery =
-    changes.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row],
-          _: Long) =>
-        mergeUpsertBatch(batch.toDF(), targetTable, keyCols, seqCol,
-          opCol)
-      }
-      .start()
+      opCol: String): StreamingQuery =
+    eachBatch(changes, checkpointDir) { (batch, _) =>
+      mergeUpsertBatch(batch.toDF(), targetTable, keyCols, seqCol, opCol)
+    }.start()
 
   /** Reader view of a [[startCdcApply]] snapshot: live rows only.
     * During the two-rename swap window the main path briefly doesn't
@@ -1266,21 +1205,14 @@ object StreamOps {
   def startTableChangesFeed(spark: SparkSession, catalog: String,
       table: String, keyCols: Seq[String], ckptDir: String,
       triggerInterval: String = "1 second")(
-      sink: (DataFrame, Long) => Unit)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    spark.readStream.format("rate")
+      sink: (DataFrame, Long) => Unit): StreamingQuery = {
+    val ticks = spark.readStream.format("rate")
       .option("rowsPerSecond", 1).load()
-      .writeStream
-      .option("checkpointLocation", s"$ckptDir/trigger")
-      .trigger(org.apache.spark.sql.streaming.Trigger
-        .ProcessingTime(triggerInterval))
-      .foreachBatch { (_: Dataset[org.apache.spark.sql.Row],
-          _: Long) =>
-        replayTableChanges(spark, catalog, table, keyCols,
-          s"$ckptDir/feed")(sink)
-        ()
-      }
-      .start()
+    eachBatch(ticks, s"$ckptDir/trigger") { (_, _) =>
+      replayTableChanges(spark, catalog, table, keyCols,
+        s"$ckptDir/feed")(sink)
+    }.trigger(Trigger.ProcessingTime(triggerInterval)).start()
+  }
 
   /** Streaming OHLC bars — q169's candle downsampling as a
     * watermarked tumbling aggregate: open/close ride the same
@@ -1343,6 +1275,7 @@ object StreamOps {
       s"buckets and capacity must be >= 1: $buckets, $capacity")
     import items.sparkSession.implicits._
     items.groupByKey(r => java.lang.Math.floorMod(r._2, buckets.toLong))
+      // not gapSessions: a bucket summary is keyed by hash, not time
       .flatMapGroupsWithState[SsState, HhEntry](
         OutputMode.Update, GroupStateTimeout.NoTimeout) {
         (bucket: Long, rows: Iterator[(Long, Long)],

@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
@@ -64,6 +64,25 @@ class StreamCdcSpec extends SparkSpec {
     val first = live(dir)
     StreamOps.applyCdcBatch(b, dir, Seq("k"), "seq", "op")
     assert(live(dir) === first)
+  }
+
+  test("a stale swap directory stops the apply and the compaction, " +
+      "naming the interrupted job") {
+    val dir = Files.createTempDirectory("graft-cdc").toString + "/s"
+    StreamOps.applyCdcBatch(chg((1L, 0L, "I", 10L)),
+      dir, Seq("k"), "seq", "op")
+    Files.createDirectory(Paths.get(dir + ".old"))
+    val apply = intercept[IllegalArgumentException](
+      StreamOps.applyCdcBatch(chg((1L, 1L, "U", 11L)),
+        dir, Seq("k"), "seq", "op"))
+    assert(apply.getMessage.contains(s"$dir.old from an interrupted " +
+      "apply — resolve manually before applying again"), apply.getMessage)
+    val compact = intercept[IllegalArgumentException](
+      StreamOps.compactAdmissionIndex(spark, dir, 1L << 20))
+    assert(compact.getMessage.contains(s"$dir.old from an interrupted " +
+      "compaction — resolve manually before compacting again"),
+      compact.getMessage)
+    assert(live(dir) === Seq((1L, 10L, 0L)), "nothing was swapped in")
   }
 
   test("restart from checkpoint resumes the stream without replaying applied batches") {

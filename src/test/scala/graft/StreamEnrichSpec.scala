@@ -63,12 +63,9 @@ class StreamEnrichSpec extends SparkSpec {
 
   test("transformWithState keeps running per-key counts across batches") {
     implicit val sqlCtx = spark.sqlContext
-    val prevProvider =
-      spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state" +
-        ".RocksDBStateStoreProvider")
-    try {
+    withConf("spark.sql.streaming.stateStore.providerClass",
+        "org.apache.spark.sql.execution.streaming.state" +
+          ".RocksDBStateStoreProvider") {
       val in = MemoryStream[(Long, java.sql.Timestamp)]
       val out = StreamOps.runningCountsTws(in.toDS())
       val q = out.writeStream.format("memory").queryName("tws")
@@ -84,13 +81,6 @@ class StreamEnrichSpec extends SparkSpec {
       assert(rows.contains((1L, 2L))) // batch 1: two events for key 1
       assert(rows.contains((2L, 1L)))
       assert(rows.contains((1L, 3L))) // batch 2: state carried over
-    } finally {
-      prevProvider match {
-        case Some(p) =>
-          spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None =>
-          spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
     }
   }
 
