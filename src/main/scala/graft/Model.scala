@@ -57,11 +57,12 @@ object Model {
   def embeddings(s: SparkSession, d: String): Dataset[Embedding] =
     { import s.implicits._; Tables.embeddings(s, d).as[Embedding] }
 
-  /** Register every table as a temp view so the full SQL front-end
-    * (`spark.sql`, including `vec_dot` from GraftExtensions) works
-    * against a scale-factor directory. */
-  def registerViews(s: SparkSession, d: String): Unit =
-    Seq("region", "nation", "customer", "supplier", "part", "orders",
-      "lineitem", "events", "documents", "embeddings")
-      .foreach(t => Tables.load(s, d, t).createOrReplaceTempView(t))
+  /** Register `tables` of a scale-factor directory as temp views so
+    * the SQL front-end (`spark.sql`, including `vec_dot` from
+    * GraftExtensions) reads them. Only the named tables are loaded:
+    * each load lists the table's files and analyzes a DataFrame. */
+  def registerViews(s: SparkSession, d: String, table: String,
+      more: String*): Unit =
+    (table +: more).foreach(t =>
+      Tables.load(s, d, t).createOrReplaceTempView(t))
 }

@@ -72,7 +72,8 @@ object Aggregators {
     * and falls back to the BigDecimal op only within a few ulps of a
     * half-tie (where double arithmetic could disagree with the
     * shortest-decimal rounding) — ~10⁻³ of inputs, keeping the loop
-    * in long arithmetic.
+    * in long arithmetic. [[Exact]] computes the same term as a column
+    * expression at any scale, behind every other exact sum.
     *
     * Bounds (loud, not silent): accumulation uses `Math.addExact`,
     * so a cell exceeding ±2⁶³ (value sum ≈ 9.2×10⁹ after the 10⁹

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.functions.Exact
+
 /** Principal-component analysis over an embedding column: the exact
   * d×d covariance matrix (one distributed pass) and the dominant
   * eigenvector by fixed-iteration power method — the classic
@@ -20,16 +22,14 @@ import org.apache.spark.sql.functions._
   * are driver-cheap metadata jobs). Nothing driver-side ever holds a
   * row of data — only the d-vector.
   *
-  * Determinism: every sum is a decimal-exact fold of terms rounded to
-  * a fixed scale (the [[graft.queries.Q.dsum]] pattern — float
+  * Determinism: every sum is an exact fold of terms rounded to a
+  * fixed scale ([[graft.functions.Exact.sum]] of `decimal(28,s)`
+  * terms — float
   * products carry ≤ 48 significand bits, far inside the rounding
   * scale), and the derived double arithmetic (mean products, matvec,
   * final normalize) is the same IEEE op sequence any engine replays.
   */
 object Pca {
-
-  private def dsum(c: org.apache.spark.sql.Column, scale: Int) =
-    sum(round(c, scale).cast(s"decimal(28,$scale)")).cast("double")
 
   /** Element-wise mean vector (i, m) — decimal-exact per position,
     * the centering vector for [[covariance]] and the first half of
@@ -38,8 +38,7 @@ object Pca {
     df.select(posexplode(col(embCol)).as(Seq("i", "xi")))
       .select(col("i"), col("xi").cast("double").as("xi"))
       .groupBy(col("i"))
-      .agg((dsum(col("xi"), 7) / count(lit(1)).cast("double"))
-        .as("m"))
+      .agg(Exact.mean(col("xi"), 7, 28).as("m"))
 
   /** Exact population covariance entries (i, j, c) — all d² of them,
     * including both triangles (the power method wants the full
@@ -104,14 +103,14 @@ object Pca {
     val ones = spark.range(dim)
       .select(col("id").cast("int").as("pos"), lit(1.0d).as("v"))
     val last = Ckpt.iterate(ones, iters,
-        dsum(col("v") * col("v"), 12))(Ckpt.Stop.Never) { w =>
+        Exact.sum(col("v") * col("v"), 12, 28))(Ckpt.Stop.Never) { w =>
       // the all-ones start is used as is, not scaled by its norm
       val v = if (w.rounds == 0) w.df else unit(w)
       cov
         .join(broadcast(v.select(col("pos").as("j"), col("v"))),
           Seq("j"))
         .groupBy(col("i").as("pos"))
-        .agg(dsum(col("c") * col("v"), 9).as("v"))
+        .agg(Exact.sum(col("c") * col("v"), 9, 28).as("v"))
     }
     unit(last).select(col("pos"), col("v").as("loading"))
   }

@@ -6,6 +6,8 @@ import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.functions.Exact
+
 /** Product quantization (Jégou, Douze, Schmid, "Product Quantization
   * for Nearest Neighbor Search", TPAMI 2011) — the vector-compression
   * half of an IVF-PQ ANN index: the d-dim space is split into `subs`
@@ -129,9 +131,9 @@ object Pq {
     * re-estimate each (j, m) centroid as the element-wise mean of its
     * assigned sub-vectors. Cells that attract no vectors keep their
     * seed centroid (the standard empty-cluster rule). Centroid means
-    * use the q33/q93 decimal-sum form — order-independent, so both
-    * engines derive bit-identical centroids — and are snapped to
-    * FLOAT so downstream [[encode]]/[[adcTopK]] stay on the same
+    * are [[Exact.mean]]s of `decimal(27,7)` terms — order-independent,
+    * so both engines derive bit-identical centroids — and are snapped
+    * to FLOAT so downstream [[encode]]/[[adcTopK]] stay on the same
     * float-vector kernel as the seed path (`vec_dot` is float-typed;
     * the snap is one deterministic IEEE rounding both engines replay
     * with a REAL cast).
@@ -156,9 +158,7 @@ object Pq {
       .select(col("e.j").as("j"), col("e.code").as("code"),
         posexplode(col("e.sv")).as(Seq("pos", "v")))
       .groupBy(col("j"), col("code"), col("pos"))
-      .agg((sum(round(col("v").cast("double"), 7)
-          .cast("decimal(27,7)")).cast("double") /
-        count(lit(1)).cast("double")).as("m"))
+      .agg(Exact.mean(col("v").cast("double"), 7, 27).as("m"))
       .collect().filterNot(_.isNullAt(1)) // null code: invalid vector
       .groupBy(r => (r.getInt(0), r.getLong(1)))
     val out = rows.map { case ((j, m), seed) =>

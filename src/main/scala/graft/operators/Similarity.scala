@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.functions.Exact
+
 /** Similarity search over embedding columns (SURVEY.md §2.B G14):
   * exact cosine via higher-order functions, brute-force top-k as the
   * correctness baseline, and two sublinear paths — random-hyperplane
@@ -304,17 +306,15 @@ object Similarity {
 
   /** IVF-style coarse quantization using an existing partition column
     * (or precomputed cluster assignment): centroids are the
-    * per-partition element-wise means (decimal-summed for
-    * cross-engine determinism), queries probe only their nearest
-    * centroid's partition. */
+    * per-partition element-wise means ([[Exact.mean]] of
+    * `decimal(27,7)` terms, for cross-engine determinism), queries
+    * probe only their nearest centroid's partition. */
   def centroids(corpus: DataFrame, partCol: String, embCol: String,
       dim: Int): DataFrame =
     corpus.select(col(partCol).as("part"),
         posexplode(col(embCol)).as(Seq("pos", "v")))
       .groupBy(col("part"), col("pos"))
-      .agg((sum(round(col("v").cast("double"), 7)
-          .cast("decimal(27,7)")).cast("double") /
-        count(lit(1)).cast("double")).as("m"))
+      .agg(Exact.mean(col("v").cast("double"), 7, 27).as("m"))
       .groupBy(col("part"))
       .agg(transform(array_sort(collect_list(struct(col("pos"), col("m")))),
         s => s.getField("m")).as("centroid"))

@@ -1,9 +1,9 @@
 package graft.plans
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.catalyst.expressions.{Alias, And,
   AttributeReference, Cast, Coalesce, Expression, Literal,
-  NamedExpression}
+  NamedExpression, Round}
 import org.apache.spark.sql.catalyst.expressions.aggregate.{
   AggregateExpression, Count, Max, Min, Sum}
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter,
@@ -12,6 +12,11 @@ import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation,
   LogicalRelation}
 import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.{DecimalType, DoubleType, StructField,
+  StructType}
+
+import graft.functions.Exact
 
 /** Materialized-view answering: the classic OLAP summary-table
   * rewrite, as a Catalyst optimizer rule. A registered MV records a
@@ -34,7 +39,11 @@ import org.apache.spark.sql.internal.SQLConf
   * count-rollup identity). Decimal-exact measures stay exact: the
   * summary holds per-group DECIMAL partial sums, and decimal
   * addition is associative, so sum-of-partial-sums equals the direct
-  * sum bit-for-bit.
+  * sum bit-for-bit. A measure `round(x, s).cast(decimal(p, s))` also
+  * answers [[graft.functions.Exact.sum]]`(x, s, p)` (what
+  * [[graft.queries.Q.dsum]] computes): that whole expression matches
+  * structurally too, and becomes the summary column's SUM cast to
+  * double, the same value.
   *
   * Scope (documented, not silently wrong — anything outside returns
   * the plan unchanged): single Aggregate per registered base per
@@ -71,6 +80,8 @@ object MvRegistry {
     * @param sums    [[MvRewrite.key]] of base SUM term → summary col
     * @param mins    likewise for MIN
     * @param maxs    likewise for MAX
+    * @param exact   [[MvRewrite.key]] of a whole `Exact.sum` over a
+    *                decimal SUM measure's term → that summary col
     * @param cnt     summary column holding per-group COUNT(*)
     * @param summary the MATERIALIZED summary frame (callers pass a
     *                checkpointed/cached frame — registering a lazy
@@ -78,8 +89,8 @@ object MvRegistry {
   final case class MvDef(path: String, fingerprint: String,
       dims: Map[String, String],
       sums: Map[String, String], mins: Map[String, String],
-      maxs: Map[String, String], cnt: Option[String],
-      summary: DataFrame)
+      maxs: Map[String, String], exact: Map[String, String],
+      cnt: Option[String], summary: DataFrame)
 
   @volatile private var mvs: Map[String, MvDef] = Map.empty
 
@@ -100,18 +111,41 @@ object MvRegistry {
     val (path, fp) = scanIdentity(base.queryExecution.analyzed)
       .getOrElse(throw new IllegalArgumentException(
         "MV base must be a single file-relation scan"))
-    def keyOf(c: Column): String = {
+    def measure(c: Column): Expression = {
       val plan = base.select(c.as("__m")).queryExecution.optimizedPlan
-      val e = plan.collectFirst { case p: Project => p.projectList.head }
+      plan.collectFirst { case p: Project => p.projectList.head }
         .map { case Alias(e, _) => e; case e => e }
         .getOrElse(throw new IllegalArgumentException(
           s"cannot derive measure expression for ${c.toString}"))
-      MvRewrite.key(e)
     }
     def m(xs: Seq[(Column, String)]) =
-      xs.map { case (c, n) => keyOf(c) -> n }.toMap
-    val mv =
-      MvDef(path, fp, dims, m(sums), m(mins), m(maxs), cnt, summary)
+      xs.map { case (c, n) => MvRewrite.key(measure(c)) -> n }.toMap
+    // a decimal term round(x, s).cast(decimal(p, s)) also keys the
+    // whole Exact.sum(x, s, p): built over a stand-in column of x's
+    // type, whose key is then swapped for x's
+    def exactKey(c: Column): Option[String] = measure(c) match {
+      case cast: Cast => (cast.child, cast.dataType) match {
+        case (r: Round, d: DecimalType)
+            if r.scale == Literal(d.scale) &&
+              Exact.supports(d.scale, d.precision) =>
+          val slot = "__exact_x"
+          val spark = base.sparkSession
+          val stand = spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
+            StructType(Seq(StructField(slot, r.child.dataType,
+              r.child.nullable))))
+          stand.agg(Exact.sum(col(slot), d.scale, d.precision))
+            .queryExecution.optimizedPlan
+            .collectFirst { case a: Aggregate => a.aggregateExpressions }
+            .collect { case Seq(Alias(e, _)) =>
+              MvRewrite.key(e).replace(s"attr($slot)", MvRewrite.key(r.child))
+            }
+        case _ => None
+      }
+      case _ => None
+    }
+    val exact = sums.flatMap { case (c, n) => exactKey(c).map(_ -> n) }
+    val mv = MvDef(path, fp, dims, m(sums), m(mins), m(maxs),
+      exact.toMap, cnt, summary)
     synchronized { mvs = mvs + (path -> mv) }
   }
 
@@ -248,7 +282,17 @@ object MvRewrite extends Rule[LogicalPlan] {
       .map(_.exprId).toSet
     def rewriteExpr(e: Expression): Option[Expression] = {
       var failed = false
-      val aggsDone = e.transformUp {
+      def exactSum(x: Expression): Option[Expression] =
+        mv.exact.get(key(x)).flatMap(sumOut.get).map(a =>
+          Cast(Sum(a).toAggregateExpression(), DoubleType))
+      val exactDone =
+        if (mv.exact.isEmpty) e
+        else e.transformDown(Function.unlift(exactSum))
+      val aggsDone = exactDone.transformUp {
+        case ae: AggregateExpression
+            if ae.references.nonEmpty &&
+              ae.references.forall(a => sumAttrIds.contains(a.exprId)) =>
+          ae // an Exact sum already answered from the summary
         case ae: AggregateExpression =>
           rewriteAgg(ae) match {
             case Some(r) =>

@@ -4,6 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.{Qry, Tables}
+import graft.functions.Exact
 import graft.operators.{Graph, Importance, Sq8, TextClassifier}
 import Q._
 
@@ -267,10 +268,11 @@ object Curation2 {
     * engineering / drift-audit pass before standardization or
     * quantizer training): mean, standard deviation, and 3σ outlier
     * count for each of the 64 dimensions. Element values snap to 7
-    * decimals and SUM exactly in decimal (the q137-oracle contract);
-    * variance closes in mirrored double arithmetic (DuckDB errors on
-    * decimal widths past 38, so the exact sums cast to double for
-    * the closing products); the outlier test squares instead of
+    * decimals and sum exactly (the q137-oracle contract: `Exact.sum`
+    * for x, a decimal sum for x², whose double product is not exact at
+    * scale 14); variance closes in mirrored double arithmetic (DuckDB
+    * errors on decimal widths past 38, so the exact sums are doubles
+    * for the closing products); the outlier test squares instead of
     * sqrt-ing: (x−μ)² > 9σ² — one fewer float op to mirror.
     *
     * Scale shape: one partial-aggregable (dim) rollup of the
@@ -282,15 +284,15 @@ object Curation2 {
     (s: SparkSession, d: String) => {
       val elems = Tables.embeddings(s, d)
         .select(posexplode(col("embedding")).as(Seq("j", "x0")))
-        .select(col("j"),
+        .select(col("j"), col("x0"),
           round(col("x0").cast("double"), 7).as("x"))
       val stats = elems.groupBy(col("j"))
         .agg(count(lit(1)).as("n"),
-          sum(col("x").cast("decimal(27,7)")).as("sx"),
+          Exact.sum(col("x0").cast("double"), 7, 27).as("sx"),
           sum((col("x") * col("x")).cast("decimal(27,14)"))
             .as("sxx"))
       val nd = col("n").cast("double")
-      val sxd = col("sx").cast("double")
+      val sxd = col("sx")
       val sxxd = col("sxx").cast("double")
       val mv = stats.select(col("j"), col("n"),
         (sxd / nd).as("mean"),

@@ -19,7 +19,7 @@ object Extras {
   val q49 = Qry(
     "q49_grouping_sets",
     (s: SparkSession, d: String) => {
-      Model.registerViews(s, d)
+      Model.registerViews(s, d, "orders")
       s.sql(s"""
         SELECT COALESCE(o_orderstatus, '*') AS status,
                COALESCE(o_orderpriority, '*') AS priority,

@@ -3,6 +3,8 @@ package graft.queries
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
+import graft.functions.Exact
+
 /** Shared helpers for oracle-deterministic query results.
   *
   * The driver hash-compares Spark output against DuckDB running the
@@ -11,30 +13,32 @@ import org.apache.spark.sql.functions._
   *  - Money/double sums: `round()` each term to its true decimal scale
   *    (products of 2-decimal values have an exact 4- or 6-decimal
   *    representation, and the double error of 1-2 multiplies is far
-  *    below the rounding half-ulp), then sum as DECIMAL (exact in both
-  *    engines), then cast back to double. Plain double SUM would differ
-  *    by association order between engines.
+  *    below the rounding half-ulp), sum the rounded terms exactly, then
+  *    cast back to double. Plain double SUM would differ by association
+  *    order between engines.
   *  - Timestamps rendered as strings (`date_format` vs `strftime`).
   *  - Every query ends in an ORDER BY over a unique key; Spark asc
   *    sorts nulls first but DuckDB sorts nulls last, so sort keys are
   *    never nullable (coalesce first when they could be).
   */
 object Q {
-  /** Exact cross-engine sum of a fixed-scale numeric term.
-    * decimal(18,s) per-term keeps the value Long-backed (fast path);
-    * both engines widen the SUM accumulator (Spark → precision+10,
-    * DuckDB → 38) so the running total can't overflow. */
-  def dsum(c: Column, scale: Int): Column =
-    sum(round(c, scale).cast(s"decimal(18,$scale)")).cast("double")
+  /** Exact cross-engine sum of a fixed-scale numeric term: the value
+    * of `SUM(CAST(ROUND(c, s) AS DECIMAL(18,s)))` as a double. Spark
+    * computes it with [[graft.functions.Exact.sum]] (the rounded
+    * terms as unscaled longs, summed in three long limbs and
+    * recombined once per group); DuckDB runs the decimal form
+    * ([[dsumSql]]) with its 38-digit accumulator. A registered
+    * materialized view whose measure is that decimal term answers it
+    * ([[graft.plans.MvRewrite]]). */
+  def dsum(c: Column, scale: Int): Column = Exact.sum(c, scale)
 
   /** DuckDB rendering of [[dsum]]. */
   def dsumSql(expr: String, scale: Int): String =
     s"CAST(SUM(CAST(ROUND($expr, $scale) AS DECIMAL(18,$scale))) AS DOUBLE)"
 
-  /** Exact cross-engine average: decimal sum divided by count, both
-    * cast to double before the (deterministic) division. */
-  def davg(c: Column, scale: Int): Column =
-    dsum(c, scale) / count(lit(1)).cast("double")
+  /** Exact cross-engine average: [[dsum]] divided by the row count,
+    * both doubles before the (deterministic) division. */
+  def davg(c: Column, scale: Int): Column = Exact.mean(c, scale)
 
   def davgSql(expr: String, scale: Int): String =
     s"${dsumSql(expr, scale)} / CAST(COUNT(*) AS DOUBLE)"

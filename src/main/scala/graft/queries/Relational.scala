@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.{Qry, Tables}
+import graft.functions.Exact
 import Q._
 
 /** Core relational surface (SURVEY.md §2.B G1, G5-G10): scan/filter/
@@ -205,8 +206,7 @@ object Relational {
           date_format(col("o_orderdate"), "yyyy-MM-dd").as("order_day"),
           col("o_totalprice"),
           row_number().over(w).as("seq"),
-          sum(col("o_totalprice").cast("decimal(18,2)")).over(w)
-            .cast("double").as("run_spend"),
+          Exact.sum(col("o_totalprice"), 2, w).as("run_spend"),
           coalesce(lag(col("o_totalprice"), 1).over(w), lit(-1d))
             .as("prev_price"))
         .orderBy(col("o_custkey"), col("seq"))

@@ -19,7 +19,7 @@ object SqlSurface {
   val q45 = Qry(
     "q45_sql_frontend",
     (s: SparkSession, d: String) => {
-      Model.registerViews(s, d)
+      Model.registerViews(s, d, "orders", "customer", "nation")
       s.sql(s"""
         SELECT n_name,
                COUNT(*) AS n_orders,
@@ -50,7 +50,7 @@ object SqlSurface {
   val q46 = Qry(
     "q46_sql_vec_dot",
     (s: SparkSession, d: String) => {
-      Model.registerViews(s, d)
+      Model.registerViews(s, d, "embeddings")
       s.sql("""
         SELECT vec_id,
                ROUND(vec_dot(embedding, embedding), 6) AS norm_sq
@@ -76,7 +76,7 @@ object SqlSurface {
   val q73 = Qry(
     "q73_recursive_cte",
     (s: SparkSession, d: String) => {
-      Model.registerViews(s, d)
+      Model.registerViews(s, d, "customer")
       s.sql("""
         WITH RECURSIVE up(id, cur, depth) AS (
           SELECT c_custkey, c_custkey, 0 FROM customer
@@ -107,7 +107,7 @@ object SqlSurface {
   val q110 = Qry(
     "q110_lateral_topk",
     (s: SparkSession, d: String) => {
-      Model.registerViews(s, d)
+      Model.registerViews(s, d, "nation", "supplier")
       s.sql("""
         SELECT n_name, s_name, s_acctbal
         FROM nation,
@@ -206,7 +206,7 @@ object SqlSurface {
   val q237 = Qry(
     "q237_recursive_cte",
     (s: SparkSession, d: String) => {
-      Model.registerViews(s, d)
+      Model.registerViews(s, d, "lineitem", "part")
       // r16: REVERTED to the declarative self-join (the r15
       // collect_set+pair-explode rewrite measured slower at BOTH
       // probed scales — sf0.1 13.8-17.0 s vs 7.1-8.5 s, sf1 min 11.3
@@ -258,7 +258,7 @@ object SqlSurface {
   val q248 = Qry(
     "q248_sql_udfs",
     (s: SparkSession, d: String) => {
-      Model.registerViews(s, d)
+      Model.registerViews(s, d, "orders", "customer")
       s.sql("""
         CREATE OR REPLACE TEMPORARY FUNCTION acct_tier(b DOUBLE)
         RETURNS STRING

@@ -19,7 +19,7 @@ object Subqueries {
   val q55 = Qry(
     "q55_subqueries",
     (s: SparkSession, d: String) => {
-      Model.registerViews(s, d)
+      Model.registerViews(s, d, "customer", "orders", "nation")
       s.sql("""
         SELECT c_mktsegment,
                COUNT(*) AS n_active,

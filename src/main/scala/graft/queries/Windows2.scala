@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.{Qry, Tables}
+import graft.functions.Exact
 import Q._
 
 /** Window-function completion (G7 frames + rank family) and the
@@ -31,7 +32,7 @@ object Windows2 {
         .select(
           col("o_custkey"), col("o_orderkey"),
           col("day_num"),
-          dsumW(col("o_totalprice"), 2, byDay).as("near_spend"),
+          Exact.sum(col("o_totalprice"), 2, byDay).as("near_spend"),
           count(lit(1)).over(byDay).as("near_orders"),
           first(col("o_orderkey")).over(rows3).as("first_key"),
           nth_value(col("o_orderkey"), 2).over(rows3).as("second_key"))
@@ -55,11 +56,6 @@ object Windows2 {
                ORDER BY o_orderdate, o_orderkey
                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
       ORDER BY o_custkey, o_orderkey"""))
-
-  private def dsumW(c: org.apache.spark.sql.Column, scale: Int,
-      w: org.apache.spark.sql.expressions.WindowSpec) =
-    sum(round(c, scale).cast(s"decimal(18,$scale)")).over(w)
-      .cast("double")
 
   /** Rank family: ntile, percent_rank, cume_dist + bool aggregates
     * (every/any) per group. */
@@ -154,7 +150,7 @@ object Windows2 {
   val q78 = Qry(
     "q78_time_range_frames",
     (s: SparkSession, d: String) => {
-      graft.Model.registerViews(s, d)
+      graft.Model.registerViews(s, d, "events")
       s.sql("""
         SELECT user_id,
                date_format(ts, 'yyyy-MM-dd HH:mm:ss.SSSSSS') AS ts_s,

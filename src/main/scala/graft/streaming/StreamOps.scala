@@ -215,20 +215,23 @@ object StreamOps {
 
   /** The one gap-session state machine, behind [[sessionizeWithState]]
     * and the journey twins: per key, events within `gapMs` of the open
-    * session's end extend it and a larger gap closes it, in event-time
-    * order inside each micro-batch. An event-time timeout at
+    * session's span [start, end] extend it (an out-of-order event moves
+    * `start` back) and a larger gap after `end` closes it, in
+    * event-time order inside each micro-batch. An event-time timeout at
     * `end + gapMs` closes a quiet key's session once the watermark
-    * (`gapMs` behind the latest event) passes it. `events` carries
+    * (exactly `gapMs` behind the latest event) passes it. The watermark
+    * drops any event more than `gapMs` before the open session's start;
+    * one that still arrives forms its own session. `events` carries
     * (key, ts, ...) columns; `event` maps a row to its event, `at` gives
     * the event's time in ms and `order` the in-batch order. */
   private def gapSessions[R, E, S: Encoder, O: Encoder](
       events: Dataset[R], gapMs: Long)(key: R => Long, event: R => E,
       at: E => Long, order: Ordering[E])(open: E => S,
-      extend: (S, E) => S, end: S => Long,
+      extend: (S, E) => S, start: S => Long, end: S => Long,
       close: (Long, S) => Iterator[O]): Dataset[O] = {
     require(gapMs > 0, s"gapMs must be > 0, got $gapMs")
     events
-      .withWatermark("ts", s"${gapMs / 1000} seconds")
+      .withWatermark("ts", s"$gapMs milliseconds")
       .groupByKey(key)(Encoders.scalaLong)
       .flatMapGroupsWithState[S, O](
         OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
@@ -245,6 +248,8 @@ object StreamOps {
             // events as they happened
             rows.map(event).toSeq.sorted(order).foreach { e =>
               cur = Some(cur match {
+                case Some(s) if start(s) - at(e) > gapMs =>
+                  closed ++= close(k, open(e)); s
                 case Some(s) if at(e) - end(s) <= gapMs => extend(s, e)
                 case Some(s) => closed ++= close(k, s); open(e)
                 case None => open(e)
@@ -272,8 +277,9 @@ object StreamOps {
         events.toDF("key", "ts").as[(Long, Timestamp)], gapMs)(
         _._1, _._2.getTime, identity, Ordering.Long)(
       open = t => SessState(t, t, 1L),
-      extend = (s, t) => SessState(s.start, math.max(s.end, t), s.n + 1),
-      end = _.end,
+      extend = (s, t) => SessState(math.min(s.start, t),
+        math.max(s.end, t), s.n + 1),
+      start = _.start, end = _.end,
       close = (key, s) => Iterator(Session(key, new Timestamp(s.start),
         new Timestamp(s.end), s.n)))
   }
@@ -301,9 +307,9 @@ object StreamOps {
         _._1, r => (r._2.getTime, r._3, r._4), _._1,
         Ordering.by((e: Ev) => (e._1, e._2)))(
       open = e => SessPathsState(e._1, e._1, Seq(e)),
-      extend = (s, e) =>
-        SessPathsState(s.start, math.max(s.end, e._1), s.evs :+ e),
-      end = _.end, close = close)
+      extend = (s, e) => SessPathsState(math.min(s.start, e._1),
+        math.max(s.end, e._1), s.evs :+ e),
+      start = _.start, end = _.end, close = close)
   }
 
   /** Streaming twin of [[graft.operators.Journeys

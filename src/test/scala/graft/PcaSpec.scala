@@ -46,6 +46,21 @@ class PcaSpec extends SparkSpec {
       assert(math.abs(v(i)) < 0.05, s"dim $i loading ${v(i)}"))
   }
 
+  test("large values keep the decimal(28,s) term range") {
+    // dim 0 swings ±300: round 0's matvec of the all-ones start has
+    // |v| near 4.5e4, so the squared-norm terms at scale 12 pass both
+    // a long and decimal(18,12)
+    val rows = (0 until 40).map { i =>
+      Array((if (i % 2 == 0) 300f else -300f), 3f * (i % 3),
+        2f * (i % 5), 7f)
+    }
+    val v = Pca.topComponent(rows.toDF("e"), "e", 4, iters = 4)
+      .as[(Int, Double)].collect().toMap
+    assert(math.abs(math.abs(v(0)) - 1.0) < 1e-3,
+      s"dominant loading not on dim 0: $v")
+    assert(math.abs(v.values.map(x => x * x).sum - 1.0) < 1e-9)
+  }
+
   test("identical vectors (zero covariance) yield zero loadings, no error") {
     val df = Seq.fill(5)(Array(1f, 2f, 3f)).toDF("e")
     val v = Pca.topComponent(df, "e", 3, iters = 2)

@@ -73,7 +73,8 @@ class StreamMechanismSpec extends AnyFunSuite {
   }
 
   test("the gap-session watermark appears only in gapSessions") {
-    onlyIn(mainSources, "withWatermark(\"ts\", s\"${gapMs", streamOps,
+    // `s"$` covers the interpolated gap in any form: `$gapMs`, `${gapMs`
+    onlyIn(mainSources, "withWatermark(\"ts\", s\"$", streamOps,
       "gapSessions")
   }
 

@@ -290,6 +290,38 @@ class StreamingSpec extends SparkSpec {
     assertSameOnRocksDb(matchDefault, matchRecognize("smatch_rocksdb"))
   }
 
+  /** An out-of-order event inside the watermark and before the open
+    * session's start moves the start back: the emitted span covers
+    * both events, as batch `Sessionize` starts it at 00:00:30. */
+  private def earlyEvent(name: String) =
+    runBatches(name, Seq(Seq((1L, ts("2024-01-01 00:01:00"))),
+        Seq((1L, ts("2024-01-01 00:00:30"))),
+        Seq((1L, ts("2024-01-01 01:00:00")))))(
+      StreamOps.sessionizeWithState(_, 60000L))
+
+  /** A fractional-second gap gets a watermark of the whole gap: the
+    * event 1.2 s behind, inside the 1.5 s gap, joins the session
+    * instead of being dropped as late. */
+  private def fractionalGap(name: String) =
+    runBatches(name, Seq(Seq((1L, ts("2024-01-01 00:00:10"))),
+        Seq((1L, ts("2024-01-01 00:00:08.8"))),
+        Seq((1L, ts("2024-01-01 01:00:00")))))(
+      StreamOps.sessionizeWithState(_, 1500L))
+
+  test("an in-watermark event before the session start moves it back") {
+    val want = Seq(StreamOps.Session(1L, ts("2024-01-01 00:00:30"),
+      ts("2024-01-01 00:01:00"), 2L))
+    assert(earlyEvent("sess_early")._1 == want)
+    assertSameOnRocksDb(want, earlyEvent("sess_early_rocksdb"))
+  }
+
+  test("a fractional-second gap keeps a late event inside the gap") {
+    val want = Seq(StreamOps.Session(1L, ts("2024-01-01 00:00:08.8"),
+      ts("2024-01-01 00:00:10"), 2L))
+    assert(fractionalGap("sess_frac")._1 == want)
+    assertSameOnRocksDb(want, fractionalGap("sess_frac_rocksdb"))
+  }
+
   test("gap sessionizers reject a non-positive gapMs, naming it") {
     implicit val sqlCtx = spark.sqlContext
     for (g <- Seq(0L, -60000L)) {

@@ -3,7 +3,8 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.operators.Graph
+import graft.functions.Exact
+import graft.operators.{Graph, Pq}
 
 /** Dev-only probe (r16): decide the VERDICT item-3 "prove or revert"
   * questions with same-JVM A/B measurements at two scale factors.
@@ -13,14 +14,20 @@ import graft.operators.Graph
   *    the identical recursive CTE.
   *  - q216 pair frame: Ckpt.cut the co-occurrence pairs (r15 form)
   *    vs recompute-per-reference (pre-r15 form).
+  *  - Pq.refine's (j, code, pos) mean aggregate at q137's shape (one
+  *    partition of exploded sub-vector elements, materialized once):
+  *    the decimal(27,7) sum it replaced vs [[graft.functions.Exact]].
+  *
+  * Variants run alternately, rep by rep, after one warm-up run each.
   *
   * Usage: Test/runMain graft.ProbeRevert <sfDir> <reps> [variants]
-  *   variants ⊆ {e237agg, e237join, q216ckpt, q216lazy}
+  *   variants ⊆ {e237agg, e237join, q216ckpt, q216lazy, refineDec,
+  *   refineExact}
   */
 object ProbeRevert {
 
   private def cte(s: SparkSession, d: String): DataFrame = {
-    Model.registerViews(s, d)
+    Model.registerViews(s, d, "part")
     s.sql(s"""
       WITH RECURSIVE reach(id, hop) AS (
         SELECT p_partkey AS id, 0 AS hop
@@ -34,7 +41,7 @@ object ProbeRevert {
   }
 
   def q237agg(s: SparkSession, d: String): DataFrame = {
-    Model.registerViews(s, d)
+    Model.registerViews(s, d, "part")
     Graph.coOccurrenceEdges(Tables.lineitem(s, d),
         "l_orderkey", "l_partkey")
       .select(col("src"), col("dst")).distinct()
@@ -44,7 +51,7 @@ object ProbeRevert {
   }
 
   def q237join(s: SparkSession, d: String): DataFrame = {
-    Model.registerViews(s, d)
+    Model.registerViews(s, d, "lineitem", "part")
     s.sql("""
         SELECT DISTINCT a.l_partkey AS src, b.l_partkey AS dst
         FROM lineitem a JOIN lineitem b
@@ -90,6 +97,37 @@ object ProbeRevert {
         Tables.lineitem(s, d), "l_orderkey", "l_partkey")
       .distinct())
 
+  private val refineInput =
+    scala.collection.concurrent.TrieMap[String, DataFrame]()
+
+  /** q137's refine input: (j, code, pos, v) for every element of every
+    * sub-vector, coded under the seed codebook, in one partition. */
+  private def refineRows(s: SparkSession, d: String): DataFrame =
+    refineInput.getOrElseUpdate(d, {
+      val e = Tables.embeddings(s, d)
+      val cb0 = Pq.codebook(e, "vec_id", "embedding", subs = 4,
+        subDim = 16, k = 16)
+      Pq.encode(e, "vec_id", "embedding", cb0, subDim = 16)
+        .join(e.select(col("vec_id"), col("embedding")), Seq("vec_id"))
+        .select(col("j"), col("code"), posexplode(slice(col("embedding"),
+          col("j") * 16 + 1, lit(16))).as(Seq("pos", "v")))
+        .coalesce(1)
+        .transform(graft.operators.Ckpt.cut)
+    })
+
+  private def refineMeans(s: SparkSession, d: String,
+      mean: org.apache.spark.sql.Column): DataFrame =
+    refineRows(s, d).groupBy(col("j"), col("code"), col("pos"))
+      .agg(mean.as("m"))
+
+  def refineDec(s: SparkSession, d: String): DataFrame =
+    refineMeans(s, d, sum(round(col("v").cast("double"), 7)
+      .cast("decimal(27,7)")).cast("double") /
+      count(lit(1)).cast("double"))
+
+  def refineExact(s: SparkSession, d: String): DataFrame =
+    refineMeans(s, d, Exact.mean(col("v").cast("double"), 7, 27))
+
   def main(args: Array[String]): Unit = {
     val sfDir = args.lift(0).getOrElse("/root/testdata/sf0.1")
     val reps = args.lift(1).map(_.toInt).getOrElse(2)
@@ -105,16 +143,26 @@ object ProbeRevert {
     spark.range(1000000).selectExpr("sum(id)").collect()
     val variants: Map[String, (SparkSession, String) => DataFrame] =
       Map("e237agg" -> q237agg, "e237join" -> q237join,
-        "q216ckpt" -> q216ckpt, "q216lazy" -> q216lazy)
-    which.foreach { name =>
-      val fn = variants(name)
-      fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      (1 to reps).foreach { i =>
-        val t0 = System.nanoTime()
-        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        val wall = (System.nanoTime() - t0) / 1e9
+        "q216ckpt" -> q216ckpt, "q216lazy" -> q216lazy,
+        "refineDec" -> refineDec, "refineExact" -> refineExact)
+    def run(name: String): Double = {
+      val t0 = System.nanoTime()
+      variants(name)(spark, sfDir).write.format("noop")
+        .mode("overwrite").save()
+      (System.nanoTime() - t0) / 1e9
+    }
+    which.foreach(run)
+    (1 to reps).foreach { i =>
+      which.foreach { name =>
+        val wall = run(name)
         println(f"""{"variant":"$name","sf":"$sfDir","rep":$i,"wall":$wall%.3f}""")
       }
+    }
+    if (Set("refineDec", "refineExact").subsetOf(which.toSet)) {
+      def means(name: String) = variants(name)(spark, sfDir)
+        .orderBy(col("j"), col("code"), col("pos")).collect().toSeq
+      val same = means("refineDec") == means("refineExact")
+      println(s"""{"refine_means_identical":$same}""")
     }
     spark.stop()
   }

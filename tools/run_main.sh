@@ -2,7 +2,9 @@
 # Dev-only: run a graft main class directly on the compiled classes
 # (bypasses sbt, so long scale probes can run in the background while
 # sbt stays free for compile/test). Mirrors build.sbt's fork JVM:
-# JDK17 --add-opens, UTC, heap/code-cache sizing. The dev probes and
+# JDK17 --add-opens, UTC, heap/code-cache sizing, concurrent explicit
+# GC (so the cleaner's periodic System.gc() pauses here exactly as it
+# does under sbt). The dev probes and
 # scale drivers live in test scope, so compile them first
 # (`sbt Test/compile`); test-classes follows classes on the classpath.
 #
@@ -24,4 +26,5 @@ exec java $ADD_OPENS \
   -Xmx"${SPARK_DRIVER_MEM:-24g}" \
   -XX:ReservedCodeCacheSize="${SPARK_CODE_CACHE:-1g}" \
   -XX:+UseCodeCacheFlushing \
+  -XX:+ExplicitGCInvokesConcurrent \
   -cp "$CP" "$@"
